@@ -17,13 +17,10 @@ done after the timed phase.
 
 from __future__ import annotations
 
-import contextlib
 import gc
 import os
-import statistics
 import threading
 import time
-import types
 from dataclasses import dataclass
 
 from mofka_spark.client import NoMoreEvents
@@ -52,7 +49,8 @@ class Shape:
     selector: dict | None = None
     tail_rate: float | None = None  # events/s of the tail phase
     tail_events: int = 0  # events of the tail phase's topic
-    min_pushes: int = 2  # topics pushed per run at least
+    min_pushes: int = 3  # topics pushed per run at least
+    min_pulls: int = 3  # topics drained per run at least
 
 
 SHAPES = {
@@ -60,10 +58,12 @@ SHAPES = {
     # every 10, one partition; the consumer acks every 5th event like
     # MofkaEventConsumerTest. The tail topic holds 1000 events, the
     # fewest that leave ten latencies above the 99th percentile. A topic
-    # pushes in about a second, one file per flush, and single topics
-    # vary by a fifth, so a run takes the median of at least five.
+    # pushes in under a second, two files per flush, and single topics
+    # vary by a third within a run, so a run takes the median of at
+    # least six; a catch-up drain takes about four seconds and varies
+    # less, so a run takes the median of three.
     "ref_small": Shape(2000, 128, 1, 8, 10, None, 5, tail_rate=200.0,
-                       tail_events=1000, min_pushes=5),
+                       tail_events=1000, min_pushes=6),
     "bulk_wide": Shape(
         50_000, 4096, 4, 1024, None, 1024, 1024,
         validator={"type": "schema",
@@ -129,6 +129,10 @@ class ClientWorkload:
         self._pull(topic, n)
         self._destroy(topic)
 
+    def warm(self) -> None:
+        """Nothing to warm outside ``setup``: its topic makes every
+        library call the timed phases make."""
+
     def _push(self, topic, n: int) -> tuple[float, list]:
         s = self.shape
         metas, pays = self.metas, self.pays
@@ -146,25 +150,27 @@ class ClientWorkload:
             self.ctx.tracer.count("log.bytes_written", _tree_bytes(topic.log.data_path))
         return dt, [f.wait() for f in futs]
 
+    def _take(self, ev, got: list, n: int) -> None:
+        """Record a delivered event for the checks, and acknowledge every
+        ``ack_every``-th one."""
+        seq = ev.metadata.get("seq", -1)
+        got.append((ev.partition, ev.offset, seq,
+                    0 <= seq < n and ev.data == self.want[seq]))
+        if len(got) % self.shape.ack_every == 0:
+            ev.acknowledge()
+
     def _pull(self, topic, n: int) -> tuple[float, list]:
         s = self.shape
-        want = self.want
         got = []
         with self.ctx.tracer.span("phase.pull"):
             t0 = time.perf_counter()
             with topic.consumer("bench", batch_size=s.consumer_batch,
                                 data_selector=self._selector()) as cons:
-                k = 0
                 while True:
                     ev = cons.pull()
                     if ev is NoMoreEvents or ev is None:
                         break
-                    seq = ev.metadata.get("seq", -1)
-                    got.append((ev.partition, ev.offset, seq,
-                                0 <= seq < n and ev.data == want[seq]))
-                    k += 1
-                    if k % s.ack_every == 0:
-                        ev.acknowledge()
+                    self._take(ev, got, n)
             dt = time.perf_counter() - t0
         if ev is None:
             self.ctx.checks.fail(1, f"{topic.name}: pull returned None on a complete topic")
@@ -219,7 +225,8 @@ class ClientWorkload:
         # the closed-loop phases share the budget; the tail phase, whose
         # length its rate sets, comes on top
         push_budget, pull_budget = seconds * 0.4, seconds * 0.6
-        pushes, pulls = _Samples(push_budget, s.min_pushes), _Samples(pull_budget, 1)
+        pushes = envinfo.Samples(push_budget, s.min_pushes)
+        pulls = envinfo.Samples(pull_budget, s.min_pulls)
         topics = []
 
         while pushes.want_more():
@@ -228,9 +235,16 @@ class ClientWorkload:
                 smp.dt, offs = self._push(topic, n)
             topics.append(topic)
             self._check_offsets(topic, offs, n)
-        for topic in topics:
-            if not pulls.want_more():
-                break
+        k = 0
+        while pulls.want_more():
+            if k == len(topics):
+                # drains replacing stolen ones may outnumber the pushes
+                topic = self._new_topic()
+                _, offs = self._push(topic, n)
+                topics.append(topic)
+                self._check_offsets(topic, offs, n)
+            topic = topics[k]
+            k += 1
             topic.mark_as_complete()
             with pulls.sample() as smp:
                 smp.dt, got = self._pull(topic, n)
@@ -245,9 +259,9 @@ class ClientWorkload:
             "pull_events_per_s": n / pull,
             "cycle_s": push + pull,
             "push_topics": len(pushes.all),
-            "push_topics_stolen": len(pushes.all) - len(pushes.clean),
+            "push_topics_stolen": pushes.stolen(),
             "pull_topics": len(pulls.all),
-            "pull_topics_stolen": len(pulls.all) - len(pulls.clean),
+            "pull_topics_stolen": pulls.stolen(),
         }
         if s.tail_rate is not None:
             out.update(self._tail(min(n, s.tail_events)))
@@ -258,7 +272,6 @@ class ClientWorkload:
         thread; delivery latency runs from each event's scheduled push
         time to the consumer's ``pull`` returning it."""
         s = self.shape
-        want = self.want
         topic = self._new_topic()
         period = int(1e9 / s.tail_rate)
         got: list = []
@@ -268,7 +281,6 @@ class ClientWorkload:
                               data_selector=self._selector())
 
         def consume():
-            k = 0
             while True:
                 ev = cons.pull()
                 if ev is None:
@@ -278,12 +290,7 @@ class ClientWorkload:
                 if ev is NoMoreEvents:
                     return
                 lat_ns.append(time.perf_counter_ns() - ev.metadata["due_ns"])
-                seq = ev.metadata.get("seq", -1)
-                got.append((ev.partition, ev.offset, seq,
-                            0 <= seq < n and ev.data == want[seq]))
-                k += 1
-                if k % s.ack_every == 0:
-                    ev.acknowledge()
+                self._take(ev, got, n)
 
         metas, pays = self.metas, self.pays
         late_ns = [0] * n
@@ -324,47 +331,6 @@ class ClientWorkload:
             "tail.backlog_max_events": backlog_max,
             "tail.empty_polls": state["empty"],
         }
-
-
-class _Samples:
-    """Per-topic timings of one phase, with a host-noise guard.
-
-    A sample during which the host stole more than ``STEAL_LIMIT_PCT``
-    of the CPU time measures the neighbours rather than the library
-    (the steal guard bench.py applies per chunk): it is kept, but does
-    not count toward the phase's ``minimum``, and the phase runs on, up
-    to twice its budget, to replace it. The median is taken over the
-    clean samples, or over all of them when none is clean."""
-
-    STEAL_LIMIT_PCT = 5.0
-
-    def __init__(self, budget: float, minimum: int):
-        self.budget = budget
-        self.minimum = minimum
-        self.all: list[float] = []
-        self.clean: list[float] = []
-        self.t0 = 0.0
-
-    def want_more(self) -> bool:
-        if not self.all:
-            self.t0 = time.perf_counter()
-            return True
-        next_end = time.perf_counter() - self.t0 + self.all[-1]
-        if len(self.clean) < self.minimum:
-            return next_end <= 2 * self.budget or len(self.all) < self.minimum
-        return next_end <= self.budget
-
-    @contextlib.contextmanager
-    def sample(self):
-        smp = types.SimpleNamespace(dt=None)
-        ticks = envinfo.cpu_ticks()
-        yield smp
-        self.all.append(smp.dt)
-        if envinfo.steal_pct(ticks, envinfo.cpu_ticks()) <= self.STEAL_LIMIT_PCT:
-            self.clean.append(smp.dt)
-
-    def median(self) -> float:
-        return statistics.median(self.clean or self.all)
 
 
 def _tree_bytes(path: str) -> int:

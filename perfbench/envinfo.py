@@ -1,10 +1,15 @@
-"""Environment evidence and process counters for one benchmark run."""
+"""Environment evidence, process counters and the host-noise guard for
+one benchmark run."""
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import os
+import statistics
 import subprocess
+import time
+import types
 
 
 def cpu_ticks() -> tuple[int, int]:
@@ -27,9 +32,9 @@ def _status_kb(pid: int, key: str) -> int:
     return 0
 
 
-def peak_rss_mb(pids: list[int]) -> float:
-    """Sum of the peak resident set (VmHWM) of ``pids``, in MiB."""
-    return sum(_status_kb(p, "VmHWM") for p in pids) / 1024.0
+def peak_rss_mb(pid: int) -> float:
+    """Peak resident set (VmHWM) of ``pid``, in MiB."""
+    return _status_kb(pid, "VmHWM") / 1024.0
 
 
 def cpu_s(pid: int) -> float:
@@ -66,3 +71,55 @@ def source_id(root: str) -> dict:
         except (OSError, subprocess.TimeoutExpired):
             pass
     return out
+
+
+class Samples:
+    """Timings of one repeated phase, with a host-noise guard.
+
+    A phase takes at least ``minimum`` samples and goes on while the
+    next one fits in its ``budget``. A sample during which the host
+    stole more than ``STEAL_LIMIT_PCT`` of the CPU time measures the
+    neighbours rather than the library (the steal guard bench.py
+    applies per chunk): it is kept, but does not count toward the
+    minimum, and up to ``minimum // 2`` (at least one) extra samples
+    are taken to replace such samples, so a stolen host lengthens a
+    phase by a bounded amount. Medians are taken over the clean
+    samples, or over all of them when none is clean. A sample's ``dt``
+    is one time, or a tuple of the times of the steps it made."""
+
+    STEAL_LIMIT_PCT = 2.0
+
+    def __init__(self, budget: float, minimum: int):
+        self.budget = budget
+        self.minimum = minimum
+        self.cap = minimum + max(1, minimum // 2)
+        self.all: list = []
+        self.clean: list = []
+        self.t0 = 0.0
+
+    def want_more(self) -> bool:
+        if not self.all:
+            self.t0 = time.perf_counter()
+            return True
+        if len(self.clean) < self.minimum:
+            return len(self.all) < self.cap
+        last = self.all[-1]
+        last = sum(last) if isinstance(last, tuple) else last
+        return time.perf_counter() - self.t0 + last <= self.budget
+
+    @contextlib.contextmanager
+    def sample(self):
+        smp = types.SimpleNamespace(dt=None)
+        ticks = cpu_ticks()
+        yield smp
+        self.all.append(smp.dt)
+        if steal_pct(ticks, cpu_ticks()) <= self.STEAL_LIMIT_PCT:
+            self.clean.append(smp.dt)
+
+    def median(self, step: int | None = None) -> float:
+        """Median time, of step ``step`` when samples are tuples."""
+        vals = self.clean or self.all
+        return statistics.median(v if step is None else v[step] for v in vals)
+
+    def stolen(self) -> int:
+        return len(self.all) - len(self.clean)

@@ -16,8 +16,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 # Word pool the synthetic documents draw from. Small on purpose: the
-# dedup, heavy-hitter and BPE gates need shared vocabulary to have
-# work to do.
+# heavy-hitter gate needs shared vocabulary to have work to do.
 _WORDS = (
     "a the key agg row scan slow fast table value part hash merge batch "
     "spark line sort window column query big small data customer join "
@@ -89,17 +88,9 @@ def _events(rng, n: int) -> pa.Table:
 
 
 def _documents(rng, n: int) -> pa.Table:
-    """Random word sequences; about one document in ten is a near
-    copy of an earlier one (one word changed), so the near-dup gates
-    find real pairs."""
-    texts: list[str] = []
-    for i in range(n):
-        if i > 10 and rng.random() < 0.1:
-            words = texts[int(rng.integers(0, i))].split()
-            words[int(rng.integers(0, len(words)))] = str(rng.choice(_WORDS))
-        else:
-            words = rng.choice(_WORDS, size=int(rng.integers(25, 75))).tolist()
-        texts.append(" ".join(words))
+    """Random word sequences of 25 to 74 words."""
+    texts = [" ".join(rng.choice(_WORDS, size=int(rng.integers(25, 75))).tolist())
+             for _ in range(n)]
     return pa.table({
         "doc_id": pa.array(np.arange(n), pa.int64()),
         "text": pa.array(texts, pa.string()),

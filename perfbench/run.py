@@ -36,13 +36,13 @@ END_TO_END = {
     "write_events_per_s": "ev/s",
     "read_events_per_s": "ev/s",
     "cycle_s": "s",
-    "peak_rss_mb": "MB",
+    "python_peak_rss_mb": "MB",
 }
 
 
 def unit_of(name: str) -> str:
     """Unit of a workload's own metric, from its name's suffix."""
-    for suffix, unit in (("_per_s", "ev/s"), ("_ms", "ms"), ("_s", "s")):
+    for suffix, unit in (("_per_s", "ev/s"), ("_ms", "ms"), ("_s", "s"), ("_mb", "MB")):
         if name.endswith(suffix):
             return unit
     return "count"
@@ -191,6 +191,11 @@ def run(args, work: str) -> dict:
         wl.setup()
         ctx.isolate()
         setup_s = time.perf_counter() - t0
+        wl.warm()
+        ctx.isolate()
+        # write back what set-up wrote, so the timed phases do not pay
+        # for it
+        os.sync()
 
         ticks0 = envinfo.cpu_ticks()
         out = wl.run(args.seconds)
@@ -201,8 +206,9 @@ def run(args, work: str) -> dict:
 
             ctx.isolate()
             layers = layer_metrics.traced_run(ctx, wl, args.seconds, out, session_s)
-        pids = [os.getpid()] + ([ctx.jvm_pid()] if ctx.jvm_pid() else [])
-        rss = envinfo.peak_rss_mb(pids)
+        jvm = ctx.jvm_pid()
+        python_rss = envinfo.peak_rss_mb(os.getpid())
+        jvm_rss = envinfo.peak_rss_mb(jvm) if jvm else None
         env = {
             "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
             "nproc": len(os.sched_getaffinity(0)), "cpu_count": os.cpu_count(),
@@ -211,14 +217,14 @@ def run(args, work: str) -> dict:
             "python": sys.version.split()[0],
             "loadavg": os.getloadavg(), "steal_pct": steal,
             "python_cpu_s": envinfo.cpu_s(os.getpid()),
-            "jvm_cpu_s": envinfo.cpu_s(pids[1]) if len(pids) > 1 else None,
+            "jvm_cpu_s": envinfo.cpu_s(jvm) if jvm else None,
             **envinfo.source_id(ROOT),
         }
     finally:
         ctx.stop()
     return {"ctx": ctx, "out": out, "session_s": session_s, "setup_s": setup_s,
             "setup_detail": getattr(wl, "setup_detail", {}),
-            "rss": rss, "env": env, "layers": layers}
+            "python_rss": python_rss, "jvm_rss": jvm_rss, "env": env, "layers": layers}
 
 
 def main(argv=None) -> int:
@@ -256,9 +262,14 @@ def main(argv=None) -> int:
     os.environ["PYTHONPATH"] = os.pathsep.join(
         [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p])
     try:
+        # start from, and leave, a filesystem with no dirty pages: a
+        # bulk_wide run writes close to a gigabyte, and its writeback
+        # must not land in the next run's timed phases
+        os.sync()
         res = run(args, work)
     finally:
         shutil.rmtree(work, ignore_errors=True)
+        os.sync()
         try:
             os.rmdir(work_root)
         except OSError:
@@ -266,9 +277,10 @@ def main(argv=None) -> int:
 
     ctx, out = res["ctx"], res["out"]
     metrics = {"setup_s": res["setup_s"], **end_to_end(args.workload, out),
-               "peak_rss_mb": res["rss"]}
+               "python_peak_rss_mb": res["python_rss"]}
     print(json.dumps({"env": res["env"]}))
-    own = {"session.start_s": res["session_s"], **res["setup_detail"], **out}
+    own = {"session.start_s": res["session_s"], **res["setup_detail"], **out,
+           "jvm_peak_rss_mb": res["jvm_rss"]}
     own = {k: {"value": v, "unit": unit_of(k)} for k, v in own.items()}
     print(json.dumps({"workload": args.workload, "metrics": own}))
     for note in ctx.checks.notes:

@@ -4,9 +4,10 @@
 
 Passes when every workload, untraced and traced, prints every metric
 named in BENCHMARK.json with its unit and zero failed operations, and
-when a consumer that drops or duplicates one event makes the run report
-failed operations instead of just a different speed. Takes a few
-minutes: every run starts its own Spark session.
+when a consumer that drops or duplicates one event, or a gate that
+returns the right number of rows with a wrong value, makes the run
+report failed operations instead of just a different speed. Takes a
+few minutes: every run starts its own Spark session.
 """
 
 from __future__ import annotations
@@ -87,6 +88,24 @@ def _faulty_consumer(kind: str):
         Consumer.pull = orig
 
 
+@contextlib.contextmanager
+def _wrong_gate():
+    """Make ``q5_region_revenue`` return every revenue one cent high:
+    the same rows, a wrong answer."""
+    from pyspark.sql import functions as F
+
+    from mofka_spark import queries
+
+    name = "q5_region_revenue"
+    orig = queries.SPARK_QUERIES[name]
+    queries.SPARK_QUERIES[name] = (
+        lambda spark, d: orig(spark, d).withColumn("revenue", F.col("revenue") + 0.01))
+    try:
+        yield
+    finally:
+        queries.SPARK_QUERIES[name] = orig
+
+
 def main() -> int:
     with open(os.path.join(os.path.dirname(HERE), "BENCHMARK.json")) as fh:
         spec = json.load(fh)
@@ -103,6 +122,10 @@ def main() -> int:
             res = _bench_here("ref_small")
         assert not res["correct"] and res["failed"] > 0, f"injected {kind} not detected"
         print(f"ok injected {kind}: {res['failed']} failed of {res['attempted']}")
+    with _wrong_gate():
+        res = _bench_here("spark_stream")
+    assert not res["correct"] and res["failed"] > 0, "injected wrong gate rows not detected"
+    print(f"ok injected wrong gate rows: {res['failed']} failed of {res['attempted']}")
     print("selftest passed")
     return 0
 
