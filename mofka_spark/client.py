@@ -481,7 +481,11 @@ class TopicHandle:
         latestOffset. Trigger.AvailableNow snapshots the FIRST announced
         offset and stops there, so pair batch_size with a
         ProcessingTime trigger (+ await_completion to terminate on topic
-        completion); use AvailableNow only for uncapped drains.
+        completion). A ``files_per_trigger`` cap works with
+        AvailableNow: the drain still runs one epoch per capped file
+        batch (2 files at a cap of 1 give 2 epochs) until it has read
+        every file present at start, which is how
+        ``streaming.completion.drain`` runs the capped gates.
 
         ``checkpoint``: pass the SAME path you give the query's
         writeStream checkpointLocation. The custom source then persists

@@ -31,7 +31,6 @@ Two implementations with identical semantics:
 
 from __future__ import annotations
 
-import json
 import re
 from typing import Any
 
@@ -575,8 +574,3 @@ def _py_affix(arg: Any, s: str, mode: str) -> bool:
     vals = arg if isinstance(arg, list) else [arg]
     return any(one(str(v), False) for v in vals)
 
-
-def validate_doc(pattern: dict[str, Any], metadata: str | dict[str, Any]) -> bool:
-    """Producer-side validate entry point: accepts raw JSON string or dict."""
-    doc = json.loads(metadata) if isinstance(metadata, str) else metadata
-    return match_event(pattern, doc)

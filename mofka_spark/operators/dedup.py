@@ -146,21 +146,6 @@ def word_ngrams(col: Column, n: int = 3) -> Column:
     return _let(F.split(normalize_text(col), " "), build)
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature as one expression: per shingle an array of H
-    seeded xxhash64 values, folded with elementwise min. array<long>.
-    (The pipeline below uses the equivalent explode/agg form, which
-    plans better for wide H.)"""
-    per_shingle = F.transform(
-        shingle_col,
-        lambda x: F.array(*[F.xxhash64(x, F.lit(s)) for s in range(num_hashes)]),
-    )
-    init = F.array_repeat(F.lit((1 << 63) - 1).cast("long"), num_hashes)
-    return F.aggregate(
-        per_shingle, init, lambda acc, h: F.zip_with(acc, h, F.least)
-    )
-
-
 def _cap_buckets(banded: DataFrame, keys: list[str], bucket_cap: int | None) -> DataFrame:
     """Drop LSH buckets with more than ``bucket_cap`` members.
 
@@ -178,16 +163,6 @@ def _cap_buckets(banded: DataFrame, keys: list[str], bucket_cap: int | None) -> 
         banded.withColumn("_bn", F.count("*").over(w))
         .filter(F.col("_bn") <= bucket_cap)
         .drop("_bn")
-    )
-
-
-def lsh_bucket_stats(banded_pairs: DataFrame, keys: list[str]) -> DataFrame:
-    """Bucket-size histogram for cap tuning: (size, n_buckets)."""
-    return (
-        banded_pairs.groupBy(*keys)
-        .agg(F.count("*").alias("size"))
-        .groupBy("size")
-        .agg(F.count("*").alias("n_buckets"))
     )
 
 
@@ -569,30 +544,6 @@ def minhash_lsh_dedup(
     )
 
 
-def simhash64(text_col: Column, ngram: int = 2) -> Column:
-    """64-bit SimHash over word n-gram xxhash64 hashes.
-
-    For each bit position, sum +1/-1 weighted by whether the gram's
-    hash has that bit set; the sign of the sum is the output bit. All
-    vectorized array expressions."""
-    grams = word_ngrams(text_col, ngram)
-    hashes = F.transform(grams, lambda g: F.xxhash64(g))
-    one = F.lit(1).cast("long")
-
-    def _vote(mask):
-        return lambda acc, h: acc + F.when(h.bitwiseAND(mask) != 0, 1).otherwise(-1)
-
-    bits = []
-    for i in range(64):
-        mask = F.shiftleft(one, i)
-        vote = F.aggregate(hashes, F.lit(0).cast("long"), _vote(mask))
-        bits.append(F.when(vote > 0, mask).otherwise(F.lit(0).cast("long")))
-    acc = bits[0]
-    for b in bits[1:]:
-        acc = acc.bitwiseOR(b)
-    return acc
-
-
 def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
@@ -611,8 +562,8 @@ def _gram_hash(col: Column, portable: bool) -> tuple[Column, int]:
 
 def _simhash_fold_kernel(bits: int):
     """Arrow kernel folding per-doc gram-hash arrays into the SimHash
-    signature. Exact integer math — identical output to the SQL vote
-    form: bit i of the signature is set iff 2*(count of grams with bit
+    signature. Exact integer math, the SimHash vote rule: bit i of the
+    signature is set iff 2*(count of grams with bit
     i set) > gram count, i.e. the +1/-1 vote sum is positive."""
     import numpy as np
     import pandas as pd

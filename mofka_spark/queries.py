@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from mofka_spark.functions.eventbridge import compile_pattern
 from mofka_spark.functions.views import DataDescriptor
 from mofka_spark.operators import dedup, joins, similarity, text
+from mofka_spark.session import pinned_shuffle
+from mofka_spark.streaming.completion import drain
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -968,41 +970,6 @@ def _events_stream(topic, max_event_id: int) -> DataFrame:
     )
 
 
-def _run_stream(spark, df, sink_name: str, output_mode: str):
-    """Checkpointed AvailableNow drain into a uniquely-named memory
-    sink; shuffle partitions pinned to 4 for the run (the stateful ops
-    allocate one state store per shuffle partition at first run; a few
-    thousand gate events need a handful, not 32)."""
-    import os
-    import tempfile
-
-    ckpt = os.path.join(tempfile.mkdtemp(prefix="mofka-streamq-"), "ckpt")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(sink_name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        # release the manager's reference to the terminated query (its
-        # retained execution plans + progress history age the session;
-        # see streaming/completion.py). The memory-sink TABLE lives in
-        # the catalog, not on the query object, so the returned frame
-        # is unaffected.
-        try:
-            spark.streams.resetTerminated()
-        except Exception:  # noqa: BLE001 — hygiene only
-            pass
-    return spark.table(sink_name)
-
-
 # Streaming event-time aggregation END-TO-END: events flow through the
 # engine (topic sink -> ledger -> custom streaming source), a
 # withWatermark + window() aggregation runs under Trigger.AvailableNow,
@@ -1030,10 +997,14 @@ def q_streaming_hourly_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
     )
-    out = _run_stream(
-        spark, agg, "hstats_" + uuid.uuid4().hex[:8], "complete"
+    name = "hstats_" + uuid.uuid4().hex[:8]
+    drain(
+        spark,
+        agg.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete"),
     )
-    return out.select(
+    return spark.table(name).select(
         F.col("w.start").alias("hour"), "event_type", "n", "sum_value"
     )
 
@@ -1071,11 +1042,16 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions = parsed.groupBy(
         F.session_window("ts", "30 minutes").alias("sw"), "user_id"
     ).agg(F.count("*").alias("n_ev"))
-    out = _run_stream(
-        spark, sessions, "sess_" + uuid.uuid4().hex[:8], "complete"
+    name = "sess_" + uuid.uuid4().hex[:8]
+    drain(
+        spark,
+        sessions.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete"),
     )
     return (
-        out.groupBy("user_id")
+        spark.table(name)
+        .groupBy("user_id")
         .agg(
             F.count("*").cast("long").alias("n_sessions"),
             F.sum("n_ev").cast("long").alias("n_events"),
@@ -1891,9 +1867,9 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             dedup.normalize_text(F.get_json_object("metadata", "$.text"))
         ).alias("content_hash")
     )
-    return _run_stream(
-        spark, out, "sdedup_" + uuid.uuid4().hex[:8], "append"
-    )
+    name = "sdedup_" + uuid.uuid4().hex[:8]
+    drain(spark, out.writeStream.format("memory").queryName(name))
+    return spark.table(name)
 
 
 # Incremental NEAR-dup (streaming/neardup.py): documents stream through
@@ -1956,25 +1932,12 @@ def q_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.get_json_object("metadata", "$.text").alias("text"),
     )
     store = os.path.join(tempfile.mkdtemp(prefix="mofka-neardup-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(
-                neardup_sink(store, num_hashes=32, bands=16)
-            )
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_neardup did not drain the topic")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    drain(
+        spark,
+        parsed.writeStream.foreachBatch(
+            neardup_sink(store, num_hashes=32, bands=16)
+        ),
+    )
     return read_result(spark, store)
 
 
@@ -2019,25 +1982,12 @@ def q_streaming_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("j.vec_id").alias("id"), F.col("j.embedding"))
     )
     store = os.path.join(tempfile.mkdtemp(prefix="mofka-annidx-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(
-                ann_index_sink(store, centroids, id_col="id")
-            )
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_ann_index did not drain the topic")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    drain(
+        spark,
+        parsed.writeStream.foreachBatch(
+            ann_index_sink(store, centroids, id_col="id")
+        ),
+    )
     queries_df = emb.filter(F.col("vec_id") < 8)
     approx = search_index(
         spark, store, queries_df, centroids, k=5, nprobe=6
@@ -2072,23 +2022,14 @@ def q_streaming_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     topic = _stream_fixture(spark, sf_dir, "events")
     parsed = _events_stream(topic, 5000).select("event_type", "value")
-    root = tempfile.mkdtemp(prefix="mofka-rollup-")
-    agg_path = os.path.join(root, "agg")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        aggs = {"value": ["count", "sum"]}
-        q = (
-            parsed.writeStream.foreachBatch(
-                rollup_sink(agg_path, ["event_type"], aggs)
-            )
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    agg_path = os.path.join(tempfile.mkdtemp(prefix="mofka-rollup-"), "agg")
+    aggs = {"value": ["count", "sum"]}
+    drain(
+        spark,
+        parsed.writeStream.foreachBatch(
+            rollup_sink(agg_path, ["event_type"], aggs)
+        ),
+    )
     out = read_rollup(spark, agg_path, ["event_type"], aggs)
     return out.select(
         "event_type",
@@ -2151,28 +2092,17 @@ def q_streaming_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_count_bpe(F.col("text")).cast("long").alias("n_bpe"),
         F.length("text").cast("long").alias("n_chars"),
     )
-    root = tempfile.mkdtemp(prefix="mofka-fert-")
-    agg_path = os.path.join(root, "agg")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    agg_path = os.path.join(tempfile.mkdtemp(prefix="mofka-fert-"), "agg")
     aggs = {
         "text": "count",
         "n_words": "sum",
         "n_bpe": "sum",
         "n_chars": "sum",
     }
-    try:
-        q = (
-            proj.writeStream.foreachBatch(
-                rollup_sink(agg_path, ["lang"], aggs)
-            )
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    drain(
+        spark,
+        proj.writeStream.foreachBatch(rollup_sink(agg_path, ["lang"], aggs)),
+    )
     out = read_rollup(spark, agg_path, ["lang"], aggs)
     return out.select(
         "lang",
@@ -3048,15 +2978,13 @@ def q_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import tempfile
 
     from mofka_spark.client import Driver
     from mofka_spark.streaming.sink import topic_sink
 
     src = _stream_fixture(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="mofka-pipe-")
-    driver = Driver(spark, root)
+    driver = Driver(spark, tempfile.mkdtemp(prefix="mofka-pipe-"))
     driver.create_topic("pipe-dst", num_partitions=2)
     derived = (
         _events_stream(src, 2500)
@@ -3071,15 +2999,12 @@ def q_streaming_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("metadata")
         )
     )
-    q = (
+    drain(
+        spark,
         derived.writeStream.foreachBatch(
             topic_sink(driver, "pipe-dst", data_col=None, sink_id="pipe")
-        )
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
-    q.awaitTermination(300)
     out = driver.open_topic("pipe-dst").dataframe()
     m = F.from_json("metadata", "event_id long, user_id long, doubled double")
     return out.select(m.alias("m")).select(
@@ -3149,10 +3074,9 @@ def q_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sessions = sessionize_stream(parsed, gap_sec=1800, watermark_delay="1 minute")
-    out = _run_stream(
-        spark, sessions, "stateful_" + uuid.uuid4().hex[:8], "append"
-    )
-    return out.filter(F.col("session_start") <= F.lit(gmax))
+    name = "stateful_" + uuid.uuid4().hex[:8]
+    drain(spark, sessions.writeStream.format("memory").queryName(name))
+    return spark.table(name).filter(F.col("session_start") <= F.lit(gmax))
 
 
 # Stream-stream interval join: clicks and purchases flow as TWO live
@@ -3201,10 +3125,9 @@ def q_streaming_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("p_ts"))
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR")),
     )
-    out = _run_stream(
-        spark, joined, "sjoin_" + uuid.uuid4().hex[:8], "append"
-    )
-    return out.select(
+    name = "sjoin_" + uuid.uuid4().hex[:8]
+    drain(spark, joined.writeStream.format("memory").queryName(name))
+    return spark.table(name).select(
         F.col("c_id").alias("click_id"),
         F.col("p_id").alias("purchase_id"),
         F.col("c_user").alias("user_id"),
@@ -4279,23 +4202,7 @@ def q_streaming_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.get_json_object("metadata", "$.text").alias("text"),
     )
     store = os.path.join(tempfile.mkdtemp(prefix="mofka-textidx-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(index_sink(store))
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_inverted_index did not drain")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    drain(spark, parsed.writeStream.foreachBatch(index_sink(store)))
     idx = read_index(spark, store, min_df=2, max_df_ratio=0.95)
     return idx.select(
         "token",
@@ -4329,23 +4236,7 @@ def q_streaming_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.get_json_object("metadata", "$.text").alias("text"),
     )
     store = os.path.join(tempfile.mkdtemp(prefix="mofka-bm25idx-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(index_sink(store))
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_bm25 did not drain the topic")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    drain(spark, parsed.writeStream.foreachBatch(index_sink(store)))
     return read_bm25(spark, store, ["hash", "merge", "window"])
 
 
@@ -4487,21 +4378,7 @@ def q_streaming_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "value", "event_type"
     )
     store = os.path.join(tempfile.mkdtemp(prefix="mofka-monitor-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(audit_sink(store, rules))
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    drain(spark, parsed.writeStream.foreachBatch(audit_sink(store, rules)))
     return read_audit(spark, store, rules)
 
 
@@ -4995,25 +4872,12 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("item")
     )
     store = os.path.join(tempfile.mkdtemp(prefix="mofka-hh-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            items.writeStream.foreachBatch(
-                heavyhitter_sink(store, m_per_epoch=200_000)
-            )
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_heavy_hitters did not drain")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    drain(
+        spark,
+        items.writeStream.foreachBatch(
+            heavyhitter_sink(store, m_per_epoch=200_000)
+        ),
+    )
     return read_top_k(spark, store, k=20)
 
 
@@ -5254,23 +5118,7 @@ def q_streaming_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("j.embedding").alias("vec"))
     )
     store = os.path.join(tempfile.mkdtemp(prefix="mofka-moments-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(moments_sink(store, "vec"))
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_pca did not drain")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    drain(spark, parsed.writeStream.foreachBatch(moments_sink(store, "vec")))
     return read_component(spark, store, iters=4)
 
 
@@ -5299,23 +5147,12 @@ def q_streaming_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     topic = _stream_fixture(spark, sf_dir, "events")
     parsed = _events_stream(topic, 5000).select("event_type", "user_id")
     store = os.path.join(tempfile.mkdtemp(prefix="mofka-distinct-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(
-                distinct_sink(store, ["event_type"], "user_id", lg_k=12)
-            )
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    drain(
+        spark,
+        parsed.writeStream.foreachBatch(
+            distinct_sink(store, ["event_type"], "user_id", lg_k=12)
+        ),
+    )
     approx = read_distinct(
         spark, store, ["event_type"], "event_type string, sk binary"
     )
@@ -5451,25 +5288,14 @@ def q_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     topic = _stream_fixture(spark, sf_dir, "events")
     parsed = _events_stream(topic, 5000).select("event_type", "value")
     store = os.path.join(tempfile.mkdtemp(prefix="mofka-hist-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(
-                histogram_sink(
-                    store, ["event_type"], "value", lo=0.0, hi=100.0, nbins=50
-                )
+    drain(
+        spark,
+        parsed.writeStream.foreachBatch(
+            histogram_sink(
+                store, ["event_type"], "value", lo=0.0, hi=100.0, nbins=50
             )
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+        ),
+    )
     return read_quantiles(
         spark,
         store,
@@ -5696,25 +5522,12 @@ def q_streaming_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.get_json_object("metadata", "$.doc_id").alias("key")
     )
     store = os.path.join(tempfile.mkdtemp(prefix="mofka-bloom-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            keys.writeStream.foreachBatch(
-                bloom_sink(store, "key", m_bits=16384, k=4)
-            )
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_bloom_membership did not drain")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    drain(
+        spark,
+        keys.writeStream.foreachBatch(
+            bloom_sink(store, "key", m_bits=16384, k=4)
+        ),
+    )
     probes = spark.range(1500).select(
         "id", F.col("id").cast("string").alias("key")
     )
@@ -5759,23 +5572,10 @@ def q_streaming_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.get_json_object("metadata", "$.doc_id").alias("key")
     )
     store = os.path.join(tempfile.mkdtemp(prefix="mofka-sample-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            keys.writeStream.foreachBatch(sample_sink(store, "key", k=50))
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_reservoir did not drain")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    drain(
+        spark,
+        keys.writeStream.foreachBatch(sample_sink(store, "key", k=50)),
+    )
     return read_sample(spark, store, k=50)
 
 
@@ -6761,23 +6561,7 @@ def q_streaming_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.get_json_object("metadata", "$.text").alias("text"),
     )
     store = os.path.join(tempfile.mkdtemp(prefix="mofka-dsir-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(dsir_sink(store))
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_dsir did not drain the topic")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    drain(spark, parsed.writeStream.foreachBatch(dsir_sink(store)))
     docs = _t(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & (F.col("doc_id") < 1000)
     )
@@ -6929,23 +6713,12 @@ def q_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     topic = _stream_fixture(spark, sf_dir, "events")
     parsed = _events_stream(topic, 5000).select("user_id")
     store = os.path.join(tempfile.mkdtemp(prefix="mofka-cms-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(
-                cms_sink(store, "user_id", depth=4, width=256)
-            )
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    drain(
+        spark,
+        parsed.writeStream.foreachBatch(
+            cms_sink(store, "user_id", depth=4, width=256)
+        ),
+    )
     ev = _t(spark, sf_dir, "events").filter(F.col("event_id") < 5000)
     seen = ev.select("user_id").distinct()
     est = cms_estimates(spark, store, seen, "user_id", depth=4, width=256)
@@ -7221,23 +6994,12 @@ def q_streaming_bottomk_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     topic = _stream_fixture(spark, sf_dir, "events")
     parsed = _events_stream(topic, 5000).select("event_type", "user_id")
     store = os.path.join(tempfile.mkdtemp(prefix="mofka-bkd-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(
-                sample_sink(store, "user_id", "event_type", k=64)
-            )
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    drain(
+        spark,
+        parsed.writeStream.foreachBatch(
+            sample_sink(store, "user_id", "event_type", k=64)
+        ),
+    )
     return estimate_distinct(spark, store, k=64)
 
 
@@ -10463,25 +10225,12 @@ def q_streaming_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("id"), _synth_corpus().alias("text"))
     )
     store = os.path.join(tempfile.mkdtemp(prefix="mofka-linestore-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            parsed.writeStream.foreachBatch(
-                line_count_sink(store, min_line_chars=10)
-            )
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_line_dedup did not drain")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    drain(
+        spark,
+        parsed.writeStream.foreachBatch(
+            line_count_sink(store, min_line_chars=10)
+        ),
+    )
     docs = _t(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & (F.col("doc_id") < 1000)
     )
@@ -10853,18 +10602,11 @@ def q_web_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = webtext.web_graph(pages)
     # the iterative rounds materialize INSIDE the call (per-round
     # localCheckpoint), so the pinned shuffle width covers them — the
-    # gate graph is a few thousand edges and 32-wide shuffles are all
-    # scheduler overhead (the _run_stream discipline; production crawl
-    # graphs keep the session default). Only those checkpointed rounds
-    # run at the pinned width: the finally fires before the RETURNED
-    # frame's final union/groupBy executes, so that last aggregation
+    # gate graph is a few thousand edges (production crawl graphs keep
+    # the session default). The RETURNED frame's final union/groupBy
     # runs at session width — accepted, it is a single small shuffle.
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with pinned_shuffle(spark):
         return connected_components_alternating(edges, "src", "dst")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
 
 
 def _hits_steps(iters: int) -> str:
@@ -10949,12 +10691,8 @@ def q_web_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pinned shuffle width for the per-round checkpointed joins (the
     # web_components rationale; the final join runs at session width)
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with pinned_shuffle(spark):
         return hits(nodes, edges, iters=3)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
 
 
 # Incrementally-accumulated web link graph (streaming/webgraph.py):
@@ -11029,24 +10767,10 @@ def q_streaming_web_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         ))
     )
     store = os.path.join(tempfile.mkdtemp(prefix="mofka-webgraph-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            pages.writeStream.foreachBatch(web_graph_sink(store))
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_web_components did not drain")
+    drain(spark, pages.writeStream.foreachBatch(web_graph_sink(store)))
+    # the component rounds checkpoint inside the call: pin their width
+    with pinned_shuffle(spark):
         return web_graph_components(spark, store)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
 
 
 # URL template mining (webtext.url_templates): collapse digit runs in
@@ -11179,24 +10903,8 @@ def q_streaming_robots_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     store = os.path.join(tempfile.mkdtemp(prefix="mofka-robots-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            fetches.writeStream.foreachBatch(robots_sink(store))
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_robots_store did not drain")
-        return read_robots_rules(spark, store)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    drain(spark, fetches.writeStream.foreachBatch(robots_sink(store)))
+    return read_robots_rules(spark, store)
 
 
 # PageRank over the ACCUMULATED crawl graph (store consumer #2): the
@@ -11271,30 +10979,14 @@ def q_streaming_web_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         ))
     )
     store = os.path.join(tempfile.mkdtemp(prefix="mofka-webpr-"), "store")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            pages.writeStream.foreachBatch(web_graph_sink(store))
-            .option(
-                "checkpointLocation",
-                os.path.join(os.path.dirname(store), "ckpt"),
-            )
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        if not topic.await_completion(q, timeout=300):
-            q.stop()
-            raise RuntimeError("streaming_web_pagerank did not drain")
-        edges = read_web_graph(spark, store)
-        nodes = edges.select(F.col("src").alias("id")).union(
-            edges.select(F.col("dst").alias("id"))
-        ).distinct()
-        return pagerank(
-            nodes, edges, src_col="src", dst_col="dst", iters=3
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    drain(spark, pages.writeStream.foreachBatch(web_graph_sink(store)))
+    edges = read_web_graph(spark, store)
+    nodes = edges.select(F.col("src").alias("id")).union(
+        edges.select(F.col("dst").alias("id"))
+    ).distinct()
+    # pagerank checkpoints its edge frame inside the call: pin its width
+    with pinned_shuffle(spark):
+        return pagerank(nodes, edges, src_col="src", dst_col="dst", iters=3)
 
 
 # Domain blocklist (webtext.domain_blocklist_filter): suffix-at-label-

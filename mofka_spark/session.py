@@ -9,6 +9,7 @@ are UTC-naive).
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -40,6 +41,29 @@ _DEFAULT_CONF = {
     "spark.driver.memory": "8g",
     "spark.ui.enabled": "false",
 }
+
+
+# Shuffle width for gate-sized work (a few thousand rows): stream
+# drains and iterative graph rounds, where a session-wide 32-way
+# shuffle is all scheduler overhead and, for stateful streams, 32
+# state stores.
+PINNED_SHUFFLE_PARTITIONS = 4
+
+
+@contextlib.contextmanager
+def pinned_shuffle(spark: SparkSession):
+    """Run the block with ``spark.sql.shuffle.partitions`` set to
+    ``PINNED_SHUFFLE_PARTITIONS``, restoring the session's value after.
+    Only work that executes inside the block is affected: a lazy frame
+    returned out of it plans at the restored width."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(PINNED_SHUFFLE_PARTITIONS)
+    )
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def release_local_checkpoint(df) -> None:

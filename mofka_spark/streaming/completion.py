@@ -1,24 +1,89 @@
-"""Topic-completion semantics for continuous streaming queries.
+"""Topic completion for streaming queries: the Spark forms of the
+reference's NoMoreEvents.
 
-Reference behavior (L8/C1): when a topic is marked complete and a
-consumer has drained it, the server sends ``feed(0, NoMoreEvents)`` and
-the consumer's pulls resolve to NoMoreEvents forever
-(/root/reference/src/MemoryPartitionManager.cpp:150-155,
-/root/reference/src/MofkaConsumer.cpp:117-132).
+In the reference, once a topic is marked complete and a consumer has
+drained it, the server sends ``feed(0, NoMoreEvents)`` and every later
+pull resolves to NoMoreEvents (src/MemoryPartitionManager.cpp:150-155,
+src/MofkaConsumer.cpp:117-132). A Spark stream runs until stopped, so
+the engine offers two completion forms:
 
-Spark's continuous triggers have no source-driven shutdown (a stream
-runs until stopped), so the engine provides the equivalent as a drain
-helper: wait for the completion flag, process everything available,
-verify the committed offsets reached the ledger, then stop the query.
-``Trigger.AvailableNow`` remains the one-shot form (drain-and-exit);
-this helper gives long-running ProcessingTime queries the same
-terminate-on-complete contract.
+- ``drain(spark, writer)`` -- run-once. Starts the query with
+  ``Trigger.AvailableNow``: it processes everything the source holds at
+  start, in as many epochs as a ``files_per_trigger`` cap asks for, then
+  terminates on its own. A drain that does not finish within
+  ``DRAIN_TIMEOUT_S`` is stopped and raises, so a partial sink is never
+  returned as an answer. Every gate drains this way.
+- ``stop_when_complete(query, topic)`` -- continuous. For a long-running
+  ProcessingTime query (and the custom source's ``batch_size`` cap,
+  where AvailableNow stops at the first capped offset): wait for the
+  topic's completion flag, drain, prove the committed offsets reached
+  the ledger, then stop the query.
+
+Both release the terminated query from the session's manager.
 """
 
 from __future__ import annotations
 
 import json
+import tempfile
 import time
+
+from mofka_spark.errors import MofkaError
+from mofka_spark.session import pinned_shuffle
+
+# Upper bound on one run-once drain; a query still running then is
+# stopped and the drain raises.
+DRAIN_TIMEOUT_S = 300.0
+
+
+def _release_terminated(spark) -> None:
+    """Release the manager's references to terminated queries.
+
+    StreamingQueryManager keeps every terminated query (with its
+    IncrementalExecution plans and progress history) until
+    resetTerminated(); a long-lived session draining many topics
+    otherwise accumulates one retained query per drain (measured: ~7%
+    suite-level drag after ~50 drains in one session). A memory sink's
+    table lives in the catalog, not on the query, so it survives.
+    Side effect: terminated queries a caller still tracks through
+    awaitAnyTermination() are cleared too -- Spark offers no
+    single-query release."""
+    try:
+        spark.streams.resetTerminated()
+    except Exception:  # noqa: BLE001 -- hygiene only, never fail a drain
+        pass
+
+
+def drain(spark, writer) -> None:
+    """Run ``writer`` (a built ``DataStreamWriter``: a ``foreachBatch``
+    sink, or a ``format("memory")`` sink with its ``queryName``) once
+    over everything its source holds, and return when the query has
+    terminated.
+
+    The query runs with ``spark.sql.shuffle.partitions`` pinned (the
+    stateful operators allocate one state store per shuffle partition
+    at first run; gate-sized streams need a handful, not the session
+    default) and checkpoints into a directory the drain owns and
+    removes afterwards. A failed query raises from awaitTermination; a
+    query still running after ``DRAIN_TIMEOUT_S`` is stopped and the
+    drain raises ``MofkaError``."""
+    with pinned_shuffle(spark), tempfile.TemporaryDirectory(
+        prefix="mofka-drain-"
+    ) as ckpt:
+        query = (
+            writer.option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            if not query.awaitTermination(DRAIN_TIMEOUT_S):
+                query.stop()
+                raise MofkaError(
+                    f"stream drain {query.name or query.id} did not finish "
+                    f"within {DRAIN_TIMEOUT_S:g} s; query stopped"
+                )
+        finally:
+            _release_terminated(spark)
 
 
 def _end_offsets(progress) -> dict[str, int]:
@@ -63,7 +128,7 @@ def stop_when_complete(
     endOffset must equal the topic ledger for every partition — the
     same "cursor == total_events" check the reference's feed loop makes
     before sending NoMoreEvents
-    (/root/reference/src/DefaultPartitionManager.cpp:415-504)."""
+    (src/DefaultPartitionManager.cpp:415-504)."""
     deadline = None if timeout is None else time.time() + timeout
     while query.isActive:
         if topic._refresh().completed:
@@ -100,18 +165,5 @@ def stop_when_complete(
         time.sleep(poll_interval)
     query.stop()
     query.awaitTermination(30)
-    # Release the manager's reference to the now-terminated query.
-    # StreamingQueryManager keeps every terminated query (with its
-    # IncrementalExecution plans and progress history) until
-    # resetTerminated() — a long-lived session draining many topics
-    # otherwise accumulates one retained query per drain (measured:
-    # ~7% suite-level drag after ~50 drains in one session). This
-    # helper owns the query's lifecycle (it stopped it), so the drain
-    # is the right release point. Side effect, documented: terminated
-    # queries the CALLER was still tracking via awaitAnyTermination()
-    # are cleared too — Spark offers no single-query release.
-    try:
-        topic.driver.spark.streams.resetTerminated()
-    except Exception:  # noqa: BLE001 — hygiene only, never fail a drain
-        pass
+    _release_terminated(topic.driver.spark)
     return True

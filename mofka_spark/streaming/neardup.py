@@ -65,17 +65,12 @@ from mofka_spark.operators.dedup import (
 from mofka_spark.streaming.store import (
     bucketize_store,
     compact_epoch_store,
-    epoch_write as _epoch_write_generic,
     epoch_write_all,
     read_store as _read_store,
     read_store_split as _read_store_split,
 )
 
 _BANDS, _TEXTS, _EDGES = "bands", "texts", "edges"
-
-
-def _epoch_write(df: DataFrame, path: str, epoch_id: int) -> None:
-    _epoch_write_generic(df, path, epoch_id)
 
 
 def bucketize_bands(

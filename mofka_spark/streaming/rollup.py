@@ -33,6 +33,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
+from mofka_spark.streaming.store import epoch_write, swap_compacted
+
 _COMBINE = {
     "sum": F.sum,
     "count": F.sum,  # partial counts combine by summing
@@ -80,19 +82,7 @@ def rollup_sink(
     """
 
     def write_epoch(batch: DataFrame, epoch_id: int) -> None:
-        spark = batch.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                _partial_agg(batch, group_cols, aggs)
-                .withColumn("_epoch", F.lit(int(epoch_id)))
-                .write.mode("overwrite")
-                .partitionBy("_epoch")
-                .parquet(path)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        epoch_write(_partial_agg(batch, group_cols, aggs), path, epoch_id)
 
     return write_epoch
 
@@ -128,6 +118,4 @@ def compact_rollup(
     """Rewrite the partial table to one row per group (epoch 0 slot).
     Readers see the same merged result before and after; run it when
     partials-per-group outgrow the merge-on-read budget."""
-    from mofka_spark.streaming.store import swap_compacted
-
     swap_compacted(spark, read_rollup(spark, path, group_cols, aggs), path)

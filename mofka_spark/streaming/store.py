@@ -17,6 +17,8 @@ Protocol (the LSM shape, entirely in Spark operators):
   directories. Readers see identical content before and after; the
   swap is two renames — production on an object store would commit via
   a table format's log (Delta/Iceberg), which owns exactly this step.
+  A crash between the renames leaves no store directory; the next
+  read, write or compaction finishes the swap first (``_finish_swap``).
 """
 
 from __future__ import annotations
@@ -35,6 +37,32 @@ COMPACTED_EPOCH = -1
 _BUCKET_META = "_bucketed.json"
 
 
+def _finish_swap(path: str) -> None:
+    """Complete a compaction swap that a crash interrupted; a no-op on
+    a store that is not mid-swap, so it is safe to call before every
+    read, write and compaction.
+
+    swap_compacted renames the store to ``.compact-old`` only after
+    its ``.compact-tmp`` write has completed. So a missing store next
+    to a tmp means the tmp is whole: roll it forward. While the store
+    exists, a tmp may be a partial write and is never touched. A
+    leftover ``.compact-old`` beside a present store is removed. A
+    step another process finished first counts as done."""
+    base = path.rstrip("/")
+    tmp, old = base + ".compact-tmp", base + ".compact-old"
+    if not os.path.isdir(base) and os.path.isdir(tmp):
+        try:
+            os.rename(tmp, base)
+        except OSError:
+            if not os.path.isdir(base):
+                raise
+    if os.path.isdir(base) and os.path.isdir(old):
+        try:
+            shutil.rmtree(old)
+        except FileNotFoundError:
+            pass
+
+
 def epoch_write(
     df: DataFrame,
     path: str,
@@ -46,6 +74,7 @@ def epoch_write(
     The dynamic-overwrite mode rides on the WRITER (not a session-conf
     toggle): per-writer options are thread-safe, so a sink may run its
     independent table writes concurrently (epoch_write_all)."""
+    _finish_swap(path)
     (
         df.withColumn("_epoch", F.lit(int(epoch_id)))
         .write.mode("overwrite")
@@ -104,6 +133,7 @@ def read_store(
     point for size — the standard LSM deal. The filter is on the
     partition column, so Spark prunes non-qualifying epoch
     directories at plan time."""
+    _finish_swap(path)
     if os.path.isdir(path) and any(
         "=" in e or e.endswith(".parquet") for e in os.listdir(path)
     ):
@@ -213,6 +243,7 @@ def compact_epoch_store(
     bottom-k, ...) — every specialized store compactor routes through
     here so the swap AND the bucketize-metadata refresh stay in one
     place."""
+    _finish_swap(path)
     df = spark.read.parquet(path).drop("_epoch")
     if merge is not None:
         df = merge(df)
@@ -237,16 +268,15 @@ def swap_compacted(
     base so read_store_split's (base, overlay) watermark stays exact
     (compaction moves every epoch to -1, at or below any watermark;
     without the refresh those rows would drop out of the split)."""
+    _finish_swap(path)
     out = merged.withColumn("_epoch", F.lit(COMPACTED_EPOCH))
     tmp = path.rstrip("/") + ".compact-tmp"
     out.write.mode("overwrite").partitionBy(*partition_cols, "_epoch").parquet(
         tmp
     )
     meta = _bucket_meta(path)
-    old = path.rstrip("/") + ".compact-old"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    os.rename(path, path.rstrip("/") + ".compact-old")
+    _finish_swap(path)  # tmp -> path, then drop the old copy
     if meta:
         bucketize_store(
             spark,

@@ -4,6 +4,7 @@ Streaming parity targets (SURVEY.md L3, P7, L8): micro-batch feed with
 offset ranges from the ledger, batch_size rate control, AvailableNow
 drain semantics, windowed event-time aggs over the stream."""
 
+import os
 import time
 
 import pytest
@@ -349,6 +350,48 @@ def test_drain_releases_terminated_query_reference(driver, tmp_path, spark):
     assert topic.await_completion(q, timeout=60) is True
     assert spark.streams.awaitAnyTermination(1) is False
     assert spark.sql("SELECT * FROM release_out").count() == 10
+
+
+def test_drain_removes_checkpoint_and_raises_on_timeout(
+    driver, tmp_path, spark, monkeypatch
+):
+    """completion.drain: a finished run-once drain leaves no checkpoint
+    directory behind; a drain that outlives DRAIN_TIMEOUT_S is stopped
+    and raises instead of returning a partial sink."""
+    import tempfile
+
+    from mofka_spark.errors import MofkaError
+    from mofka_spark.streaming import completion
+
+    tmpdirs = tmp_path / "tmpdirs"
+    tmpdirs.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmpdirs))
+    topic = _fill_topic(driver, name="drain-t", partitions=1, n=10)
+
+    completion.drain(
+        spark,
+        topic.read_stream()
+        .writeStream.format("memory")
+        .queryName("drain_out")
+        .outputMode("append"),
+    )
+    assert spark.sql("SELECT * FROM drain_out").count() == 10
+    assert list(tmpdirs.iterdir()) == []
+
+    monkeypatch.setattr(completion, "DRAIN_TIMEOUT_S", 1.0)
+    running = []
+
+    def slow(batch, epoch_id):
+        running.extend(spark.streams.active)
+        time.sleep(4)
+
+    with pytest.raises(MofkaError, match="did not finish"):
+        completion.drain(
+            spark, topic.read_stream().writeStream.foreachBatch(slow)
+        )
+    assert len(running) == 1 and not running[0].isActive
+    assert spark.streams.active == []
+    assert list(tmpdirs.iterdir()) == []
 
 
 def test_stop_when_complete_times_out_on_open_topic(driver, tmp_path):
@@ -958,6 +1001,53 @@ class TestStoreCompaction:
         got = {tuple(r) for r in read_result(spark, store).collect()}
         assert len(got) == len(docs)
         assert (6, 1, True) in got  # doc 6 still finds its keeper
+
+    def test_crash_between_swap_renames_rolls_forward(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A crash after swap_compacted's first rename (store moved
+        aside, the finished compacted copy not yet moved in) leaves no
+        store directory. The next read must return the compacted rows,
+        not an empty frame, and the next epoch write must extend them,
+        not start a fresh store without the history."""
+        from mofka_spark.streaming.store import (
+            compact_epoch_store,
+            epoch_write,
+            read_store,
+        )
+
+        class Crash(Exception):
+            pass
+
+        store = str(tmp_path / "store")
+        schema = "k long"
+        epoch_write(spark.createDataFrame([(1,), (2,)], schema), store, 0)
+        epoch_write(spark.createDataFrame([(3,)], schema), store, 1)
+        renames = []
+        real_rename = os.rename
+
+        def rename_then_crash(src, dst):
+            renames.append(src)
+            if len(renames) == 2:
+                raise Crash()
+            real_rename(src, dst)
+
+        monkeypatch.setattr(os, "rename", rename_then_crash)
+        with pytest.raises(Crash):
+            compact_epoch_store(spark, store)
+        monkeypatch.undo()
+        assert not os.path.exists(store)
+
+        def keys(**kw):
+            rows = read_store(spark, store, schema, **kw).collect()
+            return sorted(r.k for r in rows)
+
+        # as_of_epoch=-1 reads only the compacted slot
+        assert keys(as_of_epoch=-1) == [1, 2, 3]
+        assert not os.path.exists(store + ".compact-tmp")
+        assert not os.path.exists(store + ".compact-old")
+        epoch_write(spark.createDataFrame([(4,)], schema), store, 2)
+        assert keys() == [1, 2, 3, 4]
 
     def test_ann_store_compaction_keeps_pruning(self, spark, sf_dir, tmp_path):
         from mofka_spark import plans
