@@ -97,8 +97,11 @@ def main(spark=None) -> None:
     read_top_k(spark, stores["hh"], k=5).show()
 
     # Maintenance cadence: compact each store once epoch fragments
-    # outgrow the merge-on-read budget. Answers are identical before
-    # and after; in production this is a cron job running the CLI:
+    # outgrow the merge-on-read budget. Compaction folds with the same
+    # ``merge`` the store's reader applies (in code:
+    # compact_epoch_store(spark, path, merge=heavyhitters.merge)), so
+    # answers are identical before and after; in production this is a
+    # cron job running the CLI, one `-k` per store kind:
     #   python -m mofka_spark store compact STORE -k rollup \
     #       --group-cols kind --aggs '{"value": ["count", "sum"]}'
     #   python -m mofka_spark store compact STORE -k distinct --group-cols kind

@@ -25,6 +25,7 @@ Usage::
 from __future__ import annotations
 
 import argparse
+import importlib
 import json
 import sys
 
@@ -205,75 +206,80 @@ def cmd_topic_trim(args) -> int:
     return 0
 
 
-_STORE_KINDS = (
-    "neardup", "textindex", "annindex", "heavyhitters", "moments",
-    "monitor", "distinct", "quantiles", "rollup", "bloom", "sample",
-    "dsir", "cms", "generic",
-)
+def _cols(args) -> list[str]:
+    return args.group_cols.split(",")
+
+
+def _fold(module: str, merge=lambda m, args: m.merge):
+    """Compaction of a mergeable summary store: compact_epoch_store
+    folding with streaming/<module>.py's ``merge`` (built from the
+    parsed flags where the fold has parameters)."""
+
+    def run(spark, path, args) -> None:
+        from mofka_spark.streaming.store import compact_epoch_store
+
+        m = importlib.import_module(f"mofka_spark.streaming.{module}")
+        compact_epoch_store(spark, path, merge=merge(m, args))
+
+    return run
+
+
+def _own(module: str, name: str):
+    """A store's own compactor, streaming/<module>.py:<name>(spark,
+    path) — the multi-table stores, and the unfolded generic store."""
+
+    def run(spark, path, args) -> None:
+        m = importlib.import_module(f"mofka_spark.streaming.{module}")
+        getattr(m, name)(spark, path)
+
+    return run
+
+
+# store kind -> the compaction ``store compact -k <kind>`` runs
+_STORE_COMPACT = {
+    "annindex": _own("annindex", "compact_index"),
+    "bloom": _fold("bloom"),
+    "cms": _fold("cms"),
+    "distinct": _fold("distinct", lambda m, a: m.merge(_cols(a))),
+    "dsir": _fold("dsirstore"),
+    "heavyhitters": _fold("heavyhitters"),
+    "linestore": _fold("linestore"),
+    "moments": _fold("moments"),
+    "monitor": _own("monitor", "compact_monitor"),
+    "neardup": _own("neardup", "compact_store"),
+    "pqindex": _own("pqindex", "compact_pq_index"),
+    "quantiles": _fold("quantiles", lambda m, a: m.merge(_cols(a))),
+    "robots": _fold("robots"),
+    "rollup": _fold(
+        "rollup", lambda m, a: m.merge(_cols(a), _jarg(a.aggs, "--aggs"))
+    ),
+    "sample": _fold("sample", lambda m, a: m.merge(a.k)),
+    "textindex": _own("textindex", "compact_index"),
+    "webgraph": _fold("webgraph"),
+    "generic": _own("store", "compact_epoch_store"),
+}
 
 
 def cmd_store_compact(args) -> int:
-    """Maintenance compaction for the incremental summary stores
-    (streaming/*.py compact_* — fold epoch fragments into the
-    compacted slot; reads are identical before and after). The
-    streaming analog of ``topic compact``: run on a cadence while no
-    writer is mid-epoch. ``distinct``/``quantiles`` need --group-cols,
-    ``rollup`` needs --group-cols and --aggs (the same dict its reader
-    uses)."""
+    """Maintenance compaction for the incremental summary stores: fold
+    epoch fragments into the compacted slot with the store's own
+    ``merge`` (streaming/store.py), so reads are identical before and
+    after. The streaming analog of ``topic compact``: run on a cadence
+    while no writer is mid-epoch. ``distinct``/``quantiles`` need
+    --group-cols, ``rollup`` needs --group-cols and --aggs (the same
+    dict its reader uses)."""
     from mofka_spark.session import get_spark
 
-    spark = get_spark(app_name="mofka-store-compact")
-    kind, path = args.kind, args.path
-    cols = args.group_cols.split(",") if args.group_cols else None
-    if kind in ("distinct", "quantiles", "rollup") and not cols:
+    kind = args.kind
+    if kind in ("distinct", "quantiles", "rollup") and not args.group_cols:
         print(f"--group-cols is required for kind={kind}", file=sys.stderr)
         return 2
     if kind == "rollup" and not args.aggs:
         print("--aggs is required for kind=rollup", file=sys.stderr)
         return 2
-    if kind == "neardup":
-        from mofka_spark.streaming.neardup import compact_store
-        compact_store(spark, path)
-    elif kind == "textindex":
-        from mofka_spark.streaming.textindex import compact_index
-        compact_index(spark, path)
-    elif kind == "annindex":
-        from mofka_spark.streaming.annindex import compact_index
-        compact_index(spark, path)
-    elif kind == "heavyhitters":
-        from mofka_spark.streaming.heavyhitters import compact_hitters
-        compact_hitters(spark, path)
-    elif kind == "moments":
-        from mofka_spark.streaming.moments import compact_moments
-        compact_moments(spark, path)
-    elif kind == "monitor":
-        from mofka_spark.streaming.monitor import compact_monitor
-        compact_monitor(spark, path)
-    elif kind == "distinct":
-        from mofka_spark.streaming.distinct import compact_distinct
-        compact_distinct(spark, path, cols)
-    elif kind == "quantiles":
-        from mofka_spark.streaming.quantiles import compact_histogram
-        compact_histogram(spark, path, cols)
-    elif kind == "rollup":
-        from mofka_spark.streaming.rollup import compact_rollup
-        compact_rollup(spark, path, cols, _jarg(args.aggs, "--aggs"))
-    elif kind == "bloom":
-        from mofka_spark.streaming.bloom import compact_bloom
-        compact_bloom(spark, path)
-    elif kind == "sample":
-        from mofka_spark.streaming.sample import compact_sample
-        compact_sample(spark, path, k=args.k)
-    elif kind == "dsir":
-        from mofka_spark.streaming.dsirstore import compact_dsir
-        compact_dsir(spark, path)
-    elif kind == "cms":
-        from mofka_spark.streaming.cms import compact_cms
-        compact_cms(spark, path)
-    else:  # generic epoch store
-        from mofka_spark.streaming.store import compact_epoch_store
-        compact_epoch_store(spark, path)
-    print(json.dumps({"compacted": path, "kind": kind}))
+    spark = get_spark(app_name="mofka-store-compact")
+    _STORE_COMPACT[kind](spark, args.path, args)
+    print(json.dumps({"compacted": args.path, "kind": kind}))
     return 0
 
 
@@ -750,7 +756,7 @@ def build_parser() -> argparse.ArgumentParser:
         "compact", help="Fold a store's epoch fragments (reads unchanged)"
     )
     p.add_argument("path", help="Store root directory")
-    p.add_argument("-k", "--kind", default="generic", choices=_STORE_KINDS)
+    p.add_argument("-k", "--kind", default="generic", choices=_STORE_COMPACT)
     p.add_argument("--group-cols", help="Comma list (distinct/quantiles/rollup)")
     p.add_argument("--aggs", help="Rollup aggs JSON (rollup only)")
     p.add_argument(

@@ -361,7 +361,6 @@ def pagerank(
     dst_col: str = "id_b",
     damping: float = 0.85,
     iters: int = 5,
-    release: list | None = None,
 ) -> DataFrame:
     """Power-iteration PageRank over an undirected graph — the
     link-analysis centrality used as a document-quality signal in web
@@ -383,13 +382,9 @@ def pagerank(
     at 10x scale with bit-identical output (the per-round eager
     checkpoints were pure driver synchronization; plan depth at
     iters<=5 is well inside planner budgets).
-    Returns (id, rank) with rank rounded to 6dp.
-
-    ``release``: when given, the internally checkpointed edge frame is
-    appended (it stays referenced by the returned plan — read once per
-    iteration); callers that outlive the result free its blocks via
-    ``session.release_local_checkpoint`` after materializing, exactly
-    as with :func:`hits`.
+    Returns (id, rank) with rank rounded to 6dp. The checkpointed edge
+    frame stays referenced by the returned plan (read once per
+    iteration), so its blocks live until the session ends.
     """
     sym = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
@@ -401,8 +396,6 @@ def pagerank(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if release is not None:
-        release.append(sym)
     ids = nodes.select(F.col(id_col).alias("id")).distinct()
     n = ids.count()
     deg = sym.groupBy("src").agg(F.count("*").alias("deg"))

@@ -417,7 +417,7 @@ def dsir_weights(
     # target (or, mid-ingest, in neither) — smoothing keeps every
     # bucket's term defined, so none may silently drop from the join
     terms = (
-        raw.join(F.broadcast(tgt), "bucket", "full_outer")
+        raw.join(tgt, "bucket", "full_outer")
         .crossJoin(F.broadcast(tot_r))
         .crossJoin(F.broadcast(tot_t))
         .select(

@@ -7,7 +7,7 @@ maintains the index AS vectors arrive and searches it many times:
 - centroids are fit ONCE (fit_centroids — sampled k-means, the
   "fit once, assign many" production pattern ivf_topk documents) and
   stay frozen; cell contents grow per micro-batch. A periodic re-fit +
-  re-assign is the compaction analog (rollup.compact_rollup's slot),
+  re-assign is the compaction analog (store.compact_epoch_store's slot),
   not a per-batch cost.
 - each epoch assigns the batch's vectors to their nearest cell (one
   scan, no shuffle — the centroid set broadcasts inside the kernel)

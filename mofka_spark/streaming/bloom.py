@@ -108,6 +108,11 @@ def bloom_sink(
     return write_epoch
 
 
+def merge(df: DataFrame) -> DataFrame:
+    """The store's fold: ``bit_or`` per word."""
+    return df.groupBy("word").agg(F.bit_or("bits").alias("bits"))
+
+
 def read_membership(
     spark: SparkSession,
     path: str,
@@ -135,11 +140,7 @@ def read_membership(
     probe keys, so the join-back is left to the optimizer (broadcast
     when small, shuffle at crawl-frontier probe volumes — keyed on the
     probe key either way)."""
-    words = (
-        read_store(spark, path, _SCHEMA, as_of_epoch)
-        .groupBy("word")
-        .agg(F.bit_or("bits").alias("bits"))
-    )
+    words = merge(read_store(spark, path, _SCHEMA, as_of_epoch))
     keys = probes.select(F.col(key_col).alias("__bf_key")).distinct()
     probe_pos = keys.select(
         "__bf_key",
@@ -191,12 +192,7 @@ def bloom_stats(
     false-positive estimate fill_ratio^k (the probability a random
     absent key hits k set bits). Reads only the store (<= m_bits/64
     rows), never the keys."""
-    merged = (
-        read_store(spark, path, _SCHEMA)
-        .groupBy("word")
-        .agg(F.bit_or("bits").alias("bits"))
-    )
-    return merged.agg(
+    return merge(read_store(spark, path, _SCHEMA)).agg(
         F.coalesce(F.sum(F.bit_count("bits")), F.lit(0)).alias("set_bits")
     ).select(
         "set_bits",
@@ -208,17 +204,3 @@ def bloom_stats(
         ).alias("est_fpr"),
     )
 
-
-def compact_bloom(spark: SparkSession, path: str) -> None:
-    """Fold per-epoch word fragments into the compacted slot with one
-    bit_or per word — reads identical before and after (OR is
-    idempotent)."""
-    from mofka_spark.streaming.store import compact_epoch_store
-
-    compact_epoch_store(
-        spark,
-        path,
-        merge=lambda df: df.groupBy("word").agg(
-            F.bit_or("bits").alias("bits")
-        ),
-    )

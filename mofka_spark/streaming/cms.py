@@ -63,16 +63,20 @@ def cms_sink(
     return write_epoch
 
 
+def merge(df: DataFrame) -> DataFrame:
+    """The store's fold: SUM per (r, c) cell."""
+    return df.groupBy("r", "c").agg(F.sum("cnt").alias("cnt"))
+
+
 def read_cms(
     spark: SparkSession,
     path: str,
     as_of_epoch: int | None = None,
 ) -> DataFrame:
-    """The merged sketch: SUM per (r, c) cell across stored epoch
-    partials — the same (r, c, cnt) shape count_min_estimate takes.
-    ``as_of_epoch`` time-travels (store.read_store)."""
-    frags = read_store(spark, path, _SCHEMA, as_of_epoch)
-    return frags.groupBy("r", "c").agg(F.sum("cnt").alias("cnt"))
+    """The merged sketch — the same (r, c, cnt) shape
+    count_min_estimate takes. ``as_of_epoch`` time-travels
+    (store.read_store)."""
+    return merge(read_store(spark, path, _SCHEMA, as_of_epoch))
 
 
 def cms_estimates(
@@ -93,17 +97,3 @@ def cms_estimates(
         read_cms(spark, path, as_of_epoch), probes, key_col, depth, width
     )
 
-
-def compact_cms(spark: SparkSession, path: str) -> None:
-    """Fold per-cell fragments into one row each in the compacted
-    slot. Sum is associative/commutative, so estimates are identical
-    before and after."""
-    from mofka_spark.streaming.store import compact_epoch_store
-
-    compact_epoch_store(
-        spark,
-        path,
-        merge=lambda df: df.groupBy("r", "c").agg(
-            F.sum("cnt").alias("cnt")
-        ),
-    )

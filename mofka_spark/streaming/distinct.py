@@ -55,6 +55,14 @@ def distinct_sink(
     return write_epoch
 
 
+def merge(group_cols: list[str]) -> Callable[[DataFrame], DataFrame]:
+    """The store's fold for ``group_cols``: one sketch union per
+    group."""
+    return lambda df: df.groupBy(*group_cols).agg(
+        F.hll_union_agg("sk").alias("sk")
+    )
+
+
 def read_distinct(
     spark: SparkSession,
     path: str,
@@ -67,23 +75,7 @@ def read_distinct(
     ``sk binary``) for the empty-store case; ``as_of_epoch``
     time-travels (store.read_store)."""
     frags = read_store(spark, path, schema, as_of_epoch)
-    return frags.groupBy(*group_cols).agg(
-        F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("approx_distinct")
+    return merge(group_cols)(frags).select(
+        *group_cols, F.hll_sketch_estimate("sk").alias("approx_distinct")
     )
 
-
-def compact_distinct(
-    spark: SparkSession, path: str, group_cols: list[str]
-) -> None:
-    """Union per-group sketch fragments into one row each in the
-    compacted slot. Register-wise max is idempotent, so estimates are
-    identical before and after."""
-    from mofka_spark.streaming.store import compact_epoch_store
-
-    compact_epoch_store(
-        spark,
-        path,
-        merge=lambda df: df.groupBy(*group_cols).agg(
-            F.hll_union_agg("sk").alias("sk")
-        ),
-    )

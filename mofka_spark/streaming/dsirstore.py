@@ -58,27 +58,19 @@ def dsir_sink(
     return write_epoch
 
 
+def merge(df: DataFrame) -> DataFrame:
+    """The store's fold: SUM per bucket."""
+    return df.groupBy("bucket").agg(F.sum("c").alias("c"))
+
+
 def read_bucket_counts(
     spark: SparkSession,
     path: str,
     as_of_epoch: int | None = None,
 ) -> DataFrame:
-    """Merged (bucket, cr) distribution: SUM over every stored epoch
-    fragment — exactly the batch scan's counts for the ingested set.
-    Feed to dsir_weights(raw_counts=...); ``as_of_epoch``
-    time-travels (store.read_store)."""
+    """Merged (bucket, cr) distribution — exactly the batch scan's
+    counts for the ingested set. Feed to dsir_weights(raw_counts=...);
+    ``as_of_epoch`` time-travels (store.read_store)."""
     frags = read_store(spark, path, "bucket long, c long", as_of_epoch)
-    return frags.groupBy("bucket").agg(F.sum("c").alias("cr"))
+    return merge(frags).withColumnRenamed("c", "cr")
 
-
-def compact_dsir(spark: SparkSession, path: str) -> None:
-    """Fold per-epoch fragments into one row per bucket in the
-    compacted slot. Integer sums are associative — reads are identical
-    before and after."""
-    from mofka_spark.streaming.store import compact_epoch_store
-
-    compact_epoch_store(
-        spark,
-        path,
-        merge=lambda df: df.groupBy("bucket").agg(F.sum("c").alias("c")),
-    )

@@ -82,6 +82,13 @@ def heavyhitter_sink(
     return write_epoch
 
 
+def merge(df: DataFrame) -> DataFrame:
+    """The store's fold: SUM per item. The NULL item (each epoch's
+    residual slack) folds as its own group, so the slack total
+    survives compaction."""
+    return df.groupBy("item").agg(F.sum("cnt").alias("cnt"))
+
+
 def read_top_k(
     spark: SparkSession,
     path: str,
@@ -101,9 +108,8 @@ def read_top_k(
     # adversary bound (an item we stored but rank below k undercounts
     # by at most slack from c_{k+1}, never from 0).
     merged = (
-        partials.filter(F.col("item").isNotNull())
-        .groupBy("item")
-        .agg(F.sum("cnt").alias("cnt"))
+        merge(partials)
+        .filter(F.col("item").isNotNull())
         .orderBy(F.desc("cnt"), F.asc("item"))
         .limit(k + 1)
     )
@@ -146,16 +152,3 @@ def read_top_k(
         .select("item", "cnt", "rnk", "guaranteed")
     )
 
-
-def compact_hitters(spark: SparkSession, path: str) -> None:
-    """Merge per-item kept rows and sum residual slack into the
-    compacted epoch slot. read_top_k sees identical results before and
-    after (sums of sums; residual slack total preserved)."""
-    from mofka_spark.streaming.store import compact_epoch_store
-
-    # kept rows merge per item; residual (NULL-item) rows sum into one
-    compact_epoch_store(
-        spark,
-        path,
-        merge=lambda df: df.groupBy("item").agg(F.sum("cnt").alias("cnt")),
-    )

@@ -63,16 +63,19 @@ def line_count_sink(
     return write_epoch
 
 
+def merge(df: DataFrame) -> DataFrame:
+    """The store's fold: SUM per fp."""
+    return df.groupBy("fp").agg(F.sum("n_docs").alias("n_docs"))
+
+
 def read_line_counts(
     spark: SparkSession,
     path: str,
     as_of_epoch: int | None = None,
 ) -> DataFrame:
-    """The merged per-fingerprint document counts: SUM per fp across
-    stored epoch partials. ``as_of_epoch`` time-travels
-    (store.read_store)."""
-    frags = read_store(spark, path, _SCHEMA, as_of_epoch)
-    return frags.groupBy("fp").agg(F.sum("n_docs").alias("n_docs"))
+    """The merged per-fingerprint document counts. ``as_of_epoch``
+    time-travels (store.read_store)."""
+    return merge(read_store(spark, path, _SCHEMA, as_of_epoch))
 
 
 def boilerplate_filter(
@@ -99,18 +102,3 @@ def boilerplate_filter(
     )
     return remove_lines_by_fp(df, shared, id_col, text_col)
 
-
-def compact_line_counts(spark: SparkSession, path: str) -> None:
-    """Fold per-fingerprint fragments into one row each in the
-    compacted slot. Sum is associative/commutative, so merged counts
-    (and every boilerplate_filter decision) are identical before and
-    after."""
-    from mofka_spark.streaming.store import compact_epoch_store
-
-    compact_epoch_store(
-        spark,
-        path,
-        merge=lambda df: df.groupBy("fp").agg(
-            F.sum("n_docs").alias("n_docs")
-        ),
-    )

@@ -36,6 +36,13 @@ from mofka_spark.streaming.store import (
 _SCHEMA = "i int, j int, s double"
 
 
+def merge(df: DataFrame) -> DataFrame:
+    """The store's fold: SUM per (i, j) cell. The sink applies it to
+    the per-partition kernel output, so each epoch lands as one
+    partial set."""
+    return df.groupBy("i", "j").agg(F.sum("s").alias("s"))
+
+
 def moments_sink(
     path: str,
     vec_col: str = "vec",
@@ -77,14 +84,15 @@ def moments_sink(
                 }
             )
 
-        merged = (
-            batch.select(F.col(vec_col).alias(vec_col))
-            .filter(F.col(vec_col).isNotNull())
-            .mapInPandas(partials, _SCHEMA)
-            .groupBy("i", "j")
-            .agg(F.sum("s").alias("s"))
+        epoch_write(
+            merge(
+                batch.select(F.col(vec_col).alias(vec_col))
+                .filter(F.col(vec_col).isNotNull())
+                .mapInPandas(partials, _SCHEMA)
+            ),
+            path,
+            epoch_id,
         )
-        epoch_write(merged, path, epoch_id)
 
     return write_epoch
 
@@ -97,12 +105,7 @@ def read_moments(
     ``as_of_epoch`` time-travels (store.read_store)."""
     import numpy as np
 
-    rows = (
-        read_store(spark, path, _SCHEMA, as_of_epoch)
-        .groupBy("i", "j")
-        .agg(F.sum("s").alias("s"))
-        .collect()
-    )
+    rows = merge(read_store(spark, path, _SCHEMA, as_of_epoch)).collect()
     if not rows:
         raise ValueError(f"moments store {path!r} is empty")
     cells = {(r.i, r.j): r.s for r in rows}
@@ -142,14 +145,3 @@ def read_component(
         "d long, v double",
     )
 
-
-def compact_moments(spark: SparkSession, path: str) -> None:
-    """Merge all epoch partials into one set in the compacted slot;
-    read_moments sees identical sums before and after."""
-    from mofka_spark.streaming.store import compact_epoch_store
-
-    compact_epoch_store(
-        spark,
-        path,
-        merge=lambda df: df.groupBy("i", "j").agg(F.sum("s").alias("s")),
-    )

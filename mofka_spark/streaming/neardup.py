@@ -41,7 +41,7 @@ accumulated bands into a (band_id, band_hash)-bucketed catalog table
 (operators/layout.py bucketize) so the per-epoch history join is
 shuffle-free on the store side (tests/test_plans.py pins the plan), with
 epochs since the last run joining as a small overlay — and compact old
-epochs like rollup.compact_rollup. Duplicate-of-history docs still append
+epochs with ``compact_store``. Duplicate-of-history docs still append
 their bands (they are legitimate future match targets), so the store
 grows with the corpus, not the unique set — cap with edges-aware
 retention if dup rates are extreme.
@@ -102,10 +102,12 @@ def compact_store(spark: SparkSession, store_path: str) -> None:
     identical before and after; run when epoch counts outgrow the
     merge-on-read budget. Edges dedup on rewrite (read_result's
     distinct() is set-semantic)."""
-    for sub, dedup in ((_BANDS, False), (_TEXTS, False), (_EDGES, True)):
+    for sub, merge in (
+        (_BANDS, None), (_TEXTS, None), (_EDGES, DataFrame.distinct)
+    ):
         path = os.path.join(store_path, sub)
         if os.path.isdir(path):
-            compact_epoch_store(spark, path, dedup=dedup)
+            compact_epoch_store(spark, path, merge=merge)
 
 
 def history_candidates(

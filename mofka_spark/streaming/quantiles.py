@@ -68,6 +68,14 @@ def histogram_sink(
     return write_epoch
 
 
+def merge(group_cols: list[str]) -> Callable[[DataFrame], DataFrame]:
+    """The store's fold for ``group_cols``: SUM ``cnt`` per
+    (group, bin)."""
+    return lambda df: df.groupBy(*group_cols, "bin").agg(
+        F.sum("cnt").alias("cnt")
+    )
+
+
 def read_quantiles(
     spark: SparkSession,
     path: str,
@@ -86,11 +94,7 @@ def read_quantiles(
     from pyspark.sql import Window
 
     width = (hi - lo) / nbins
-    merged = (
-        read_store(spark, path, schema, as_of_epoch)
-        .groupBy(*group_cols, "bin")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    merged = merge(group_cols)(read_store(spark, path, schema, as_of_epoch))
     w = (
         Window.partitionBy(*group_cols)
         .orderBy("bin")
@@ -124,22 +128,6 @@ def read_quantiles(
     return out
 
 
-def compact_histogram(
-    spark: SparkSession, path: str, group_cols: list[str]
-) -> None:
-    """Sum per-(group, bin) fragments into the compacted slot —
-    read_quantiles sees identical envelopes before and after."""
-    from mofka_spark.streaming.store import compact_epoch_store
-
-    compact_epoch_store(
-        spark,
-        path,
-        merge=lambda df: df.groupBy(*group_cols, "bin").agg(
-            F.sum("cnt").alias("cnt")
-        ),
-    )
-
-
 def read_drift(
     spark: SparkSession,
     path: str,
@@ -167,15 +155,11 @@ def read_drift(
     from mofka_spark.operators.quality import psi_from_binned
 
     def counts(epoch, name):
-        return (
-            read_store(spark, path, schema, epoch)
-            .groupBy(group_col, "bin")
-            .agg(F.sum("cnt").alias(name))
-            .select(
-                F.col(group_col).alias("g"),
-                F.col("bin").alias("b"),
-                name,
-            )
+        merged = merge([group_col])(read_store(spark, path, schema, epoch))
+        return merged.select(
+            F.col(group_col).alias("g"),
+            F.col("bin").alias("b"),
+            F.col("cnt").alias(name),
         )
 
     ref = counts(ref_epoch, "_nr")

@@ -71,6 +71,18 @@ def robots_sink(
     return write_epoch
 
 
+def merge(df: DataFrame) -> DataFrame:
+    """The store's fold: each domain's rows of its latest
+    ``fetch_seq`` (sentinels included). Older fetches' rows can never
+    win a max-stamp resolution, so dropping them changes no read."""
+    latest = df.groupBy("domain").agg(F.max("fetch_seq").alias("fetch_seq"))
+    return (
+        df.join(latest, ["domain", "fetch_seq"])
+        .select("domain", "fetch_seq", "prefix", "allow")
+        .distinct()
+    )
+
+
 def read_robots_rules(
     spark: SparkSession,
     path: str,
@@ -80,31 +92,10 @@ def read_robots_rules(
     LATEST fetch across stored epochs (domains whose latest fetch
     parsed zero rules contribute nothing — everything allowed).
     Feed to webtext.robots_rules_filter_df."""
-    frags = read_store(spark, path, _SCHEMA, as_of_epoch)
-    latest = frags.groupBy("domain").agg(
-        F.max("fetch_seq").alias("fetch_seq")
-    )
     return (
-        frags.join(latest, ["domain", "fetch_seq"])
+        merge(read_store(spark, path, _SCHEMA, as_of_epoch))
         .filter(F.col("prefix").isNotNull())
         .select("domain", "prefix", "allow")
         .distinct()
     )
 
-
-def compact_robots_store(spark: SparkSession, path: str) -> None:
-    """Fold fragments down to each domain's latest fetch (sentinels
-    included). Reads are identical before and after: older fetches'
-    rows can never win a max-stamp resolution, so dropping them
-    changes nothing."""
-    from mofka_spark.streaming.store import compact_epoch_store
-
-    def merge(df: DataFrame) -> DataFrame:
-        latest = df.groupBy("domain").agg(
-            F.max("fetch_seq").alias("fetch_seq")
-        )
-        return df.join(latest, ["domain", "fetch_seq"]).select(
-            "domain", "fetch_seq", "prefix", "allow"
-        ).distinct()
-
-    compact_epoch_store(spark, path, merge=merge)

@@ -10,9 +10,10 @@ Spark-native way:
   the epoch id, to a parquet partial-aggregate table;
 - reads merge-on-read: re-aggregate the partials with the combining
   form of each aggregate (sum of sums, sum of counts, min of mins...);
-- a compaction pass rewrites the partials into one row per group when
-  the partial table grows (same merge, written back) — the classic
-  LSM shape, entirely in Spark operators.
+- a compaction pass (``compact_epoch_store(merge=merge(...))``)
+  rewrites the partials into one row per group when the partial table
+  grows (same merge, written back) — the classic LSM shape, entirely
+  in Spark operators.
 
 Append-only partials make the writer race-free and idempotent (epochs
 are recorded in the data itself: a replayed epoch overwrites its own
@@ -33,7 +34,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
-from mofka_spark.streaming.store import epoch_write, swap_compacted
+from mofka_spark.streaming.store import epoch_write, read_store
 
 _COMBINE = {
     "sum": F.sum,
@@ -87,6 +88,19 @@ def rollup_sink(
     return write_epoch
 
 
+def merge(
+    group_cols: list[str], aggs: dict[str, str | list[str]]
+) -> Callable[[DataFrame], DataFrame]:
+    """The store's fold for ``group_cols``/``aggs``: each partial
+    column re-aggregated with its combining form (``_COMBINE``)."""
+    return lambda df: df.groupBy(*group_cols).agg(
+        *[
+            _COMBINE[kind](f"{col}_{kind}").alias(f"{col}_{kind}")
+            for col, kind in _kinds(aggs)
+        ]
+    )
+
+
 def read_rollup(
     spark,
     path: str,
@@ -97,25 +111,8 @@ def read_rollup(
     """Merge-on-read: combine the stored partials into final
     aggregates. O(partial rows) work — never touches the event log.
     ``as_of_epoch`` time-travels to the state after that epoch
-    committed (epochs <= id, plus the compacted slot which represents
-    everything folded at compaction time); the filter is on the
-    partition column so non-qualifying epoch directories prune at
-    plan time."""
-    partials = spark.read.parquet(path)
-    if as_of_epoch is not None:
-        partials = partials.filter(F.col("_epoch") <= int(as_of_epoch))
-    return partials.groupBy(*group_cols).agg(
-        *[
-            _COMBINE[kind](f"{col}_{kind}").alias(f"{col}_{kind}")
-            for col, kind in _kinds(aggs)
-        ]
+    committed (store.read_store). The store has no fixed row schema,
+    so reading a store no epoch has written raises."""
+    return merge(group_cols, aggs)(
+        read_store(spark, path, None, as_of_epoch)
     )
-
-
-def compact_rollup(
-    spark, path: str, group_cols: list[str], aggs: dict[str, str | list[str]]
-) -> None:
-    """Rewrite the partial table to one row per group (epoch 0 slot).
-    Readers see the same merged result before and after; run it when
-    partials-per-group outgrow the merge-on-read budget."""
-    swap_compacted(spark, read_rollup(spark, path, group_cols, aggs), path)

@@ -36,6 +36,7 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.window import WindowSpec
 
 from mofka_spark.operators.sampling import hash_bucket
 from mofka_spark.streaming.store import (
@@ -46,10 +47,13 @@ from mofka_spark.streaming.store import (
 _SCHEMA = "stratum string, key string, race long"
 
 
+def _race_order() -> WindowSpec:
+    return Window.partitionBy("stratum").orderBy(F.asc("race"), F.asc("key"))
+
+
 def _bottom_k(df: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("stratum").orderBy(F.asc("race"), F.asc("key"))
     return (
-        df.withColumn("_rk", F.row_number().over(w))
+        df.withColumn("_rk", F.row_number().over(_race_order()))
         .filter(F.col("_rk") <= k)
         .drop("_rk")
     )
@@ -87,6 +91,13 @@ def sample_sink(
     return write_epoch
 
 
+def merge(k: int) -> Callable[[DataFrame], DataFrame]:
+    """The store's fold for sample size ``k``: bottom-k per stratum of
+    the distinct stored rows (replays and cross-epoch repeats of a key
+    dedup first, so a key never occupies two sample slots)."""
+    return lambda df: _bottom_k(df.distinct(), k)
+
+
 def read_sample(
     spark: SparkSession,
     path: str,
@@ -97,27 +108,10 @@ def read_sample(
     every key ingested so far — exactly the bottom-k of the full key
     set, recovered from the per-epoch summaries alone (bottom-k of
     bottom-ks). ``as_of_epoch`` time-travels (store.read_store)."""
-    stored = read_store(spark, path, _SCHEMA, as_of_epoch)
-    # replays / cross-epoch repeats of a key dedup before ranking so a
-    # key never occupies two sample slots
-    merged = stored.distinct()
-    w = Window.partitionBy("stratum").orderBy(F.asc("race"), F.asc("key"))
-    return (
-        merged.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("stratum", "key", "race", "rnk")
-    )
-
-
-def compact_sample(spark: SparkSession, path: str, k: int = 100) -> None:
-    """Fold the store to <= k rows per stratum in the compacted slot
-    (bottom-k of bottom-ks). read_sample is identical before and
-    after."""
-    from mofka_spark.streaming.store import compact_epoch_store
-
-    compact_epoch_store(
-        spark, path, merge=lambda df: _bottom_k(df.distinct(), k)
-    )
+    stored = merge(k)(read_store(spark, path, _SCHEMA, as_of_epoch))
+    return stored.withColumn(
+        "rnk", F.row_number().over(_race_order()).cast("long")
+    ).select("stratum", "key", "race", "rnk")
 
 
 def estimate_distinct(
@@ -144,20 +138,13 @@ def estimate_distinct(
     smallest survives any bottom-k-of-bottom-k fold)."""
     from mofka_spark.operators.sampling import _MOD
 
-    stored = read_store(spark, path, _SCHEMA, as_of_epoch)
-    merged = stored.distinct().select(
-        "stratum",
-        (
-            (F.col("race").cast("double") + F.lit(1.0)) / F.lit(float(_MOD))
-        ).alias("_u"),
-    )
-    w = Window.partitionBy("stratum").orderBy("_u")
-    ranked = merged.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") <= k
-    )
-    agg = ranked.groupBy("stratum").agg(
+    stored = merge(k)(read_store(spark, path, _SCHEMA, as_of_epoch))
+    # the fold leaves the k smallest races: u_(k) is their max
+    agg = stored.groupBy("stratum").agg(
         F.count("*").cast("long").alias("_n"),
-        F.max(F.when(F.col("_rn") == k, F.col("_u"))).alias("_uk"),
+        F.max(
+            (F.col("race").cast("double") + F.lit(1.0)) / F.lit(float(_MOD))
+        ).alias("_uk"),
     )
     est = F.when(F.col("_n") < k, F.col("_n").cast("double")).otherwise(
         F.lit(float(k - 1)) / F.col("_uk")

@@ -14,11 +14,20 @@ Protocol (the LSM shape, entirely in Spark operators):
 - COMPACT: when per-group epoch fragments outgrow the merge-on-read
   budget, rewrite the store into the reserved ``_epoch=-1`` slot
   (real epochs are >= 0, so future appends never collide) and swap
-  directories. Readers see identical content before and after; the
-  swap is two renames — production on an object store would commit via
-  a table format's log (Delta/Iceberg), which owns exactly this step.
-  A crash between the renames leaves no store directory; the next
-  read, write or compaction finishes the swap first (``_finish_swap``).
+  directories. The swap is two renames — production on an object
+  store would commit via a table format's log (Delta/Iceberg), which
+  owns exactly this step. A crash between the renames leaves no store
+  directory; the next read, write or compaction finishes the swap
+  first (``_finish_swap``).
+
+The mergeable summary stores (bloom, cms, distinct, heavyhitters,
+quantiles, rollup, sample, ...) each export one ``merge``: the fold of
+stored fragments into the summary. Their readers apply it to
+``read_store`` and compaction applies it on rewrite
+(``compact_epoch_store(spark, path, merge=<module>.merge)``), so a
+fold of folds equals the fold and reads are identical before and
+after compaction. Folds with parameters are factories, e.g.
+``distinct.merge(group_cols)``.
 """
 
 from __future__ import annotations
@@ -27,6 +36,7 @@ import hashlib
 import json
 import os
 import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -229,26 +239,19 @@ def compact_epoch_store(
     spark: SparkSession,
     path: str,
     partition_cols: tuple[str, ...] = (),
-    dedup: bool = False,
-    merge=None,
+    merge: Callable[[DataFrame], DataFrame] | None = None,
 ) -> None:
     """Rewrite all epoch fragments into the ``_epoch=-1`` slot,
     preserving ``partition_cols`` layout (so e.g. the ANN store's
-    cell= directory pruning survives compaction). ``dedup=True``
-    additionally collapses full-row duplicates — correct for stores
-    whose readers are set-semantic (the neardup edge table; its
-    read-side distinct() becomes cheaper after). ``merge`` is the
-    store's fold hook: a callable DataFrame -> DataFrame applied to
-    the epoch-dropped fragments (HLL union, bit_or, per-bucket sums,
-    bottom-k, ...) — every specialized store compactor routes through
-    here so the swap AND the bucketize-metadata refresh stay in one
-    place."""
+    cell= directory pruning survives compaction). ``merge`` is the
+    store's fold (a summary module's ``merge``), applied to the
+    epoch-dropped fragments; without one the fragments are rewritten
+    as they are. The swap and the bucketize-metadata refresh stay in
+    one place (swap_compacted)."""
     _finish_swap(path)
     df = spark.read.parquet(path).drop("_epoch")
     if merge is not None:
         df = merge(df)
-    elif dedup:
-        df = df.distinct()
     swap_compacted(spark, df, path, partition_cols)
 
 

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from mofka_spark.streaming.store import epoch_write, read_store
 
@@ -61,6 +61,11 @@ def web_graph_sink(
     return write_epoch
 
 
+def merge(df: DataFrame) -> DataFrame:
+    """The store's fold: DISTINCT (src, dst) edges."""
+    return df.select("src", "dst").distinct()
+
+
 def read_web_graph(
     spark: SparkSession,
     path: str,
@@ -68,8 +73,7 @@ def read_web_graph(
 ) -> DataFrame:
     """The accumulated distinct edge set (src, dst) across stored
     epochs. ``as_of_epoch`` time-travels (store.read_store)."""
-    frags = read_store(spark, path, _SCHEMA, as_of_epoch)
-    return frags.select("src", "dst").distinct()
+    return merge(read_store(spark, path, _SCHEMA, as_of_epoch))
 
 
 def web_graph_components(
@@ -89,16 +93,3 @@ def web_graph_components(
         edges, "src", "dst", max_iter=max_iter
     )
 
-
-def compact_web_graph(spark: SparkSession, path: str) -> None:
-    """Fold edge fragments into one distinct set in the compacted
-    slot. Distinct is idempotent, so the merged graph (and every
-    downstream component/pagerank result) is identical before and
-    after."""
-    from mofka_spark.streaming.store import compact_epoch_store
-
-    compact_epoch_store(
-        spark,
-        path,
-        merge=lambda df: df.select("src", "dst").distinct(),
-    )

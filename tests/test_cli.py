@@ -6,6 +6,8 @@ import io
 import json
 from contextlib import redirect_stdout
 
+import pytest
+
 from mofka_spark.__main__ import main
 
 
@@ -72,39 +74,58 @@ class TestStoreCommands:
     script (these DO bring up a SparkSession — the spark fixture keeps
     get_spark reusing the test session)."""
 
-    def _snap(self, spark, store):
-        from mofka_spark.streaming.textindex import read_index
+    def _textindex(self, spark, store):
+        from mofka_spark.streaming.textindex import index_sink, read_index
 
-        return {
+        sink = index_sink(store)
+        sink(spark.createDataFrame([(1, "a b a"), (2, "a c")], "id long, text string"), 0)
+        sink(spark.createDataFrame([(3, "b c a")], "id long, text string"), 1)
+        return lambda: {
             (r.token, r.df, tuple(r.postings))
             for r in read_index(spark, store, min_df=1, max_df_ratio=1.0).collect()
         }
 
-    def test_store_compact_and_bucketize(self, spark, tmp_path):
-        from mofka_spark.streaming.textindex import index_sink
+    def _linestore(self, spark, store):
+        from mofka_spark.streaming.linestore import line_count_sink, read_line_counts
 
-        store = str(tmp_path / "ti")
-        sink = index_sink(store)
-        sink(spark.createDataFrame([(1, "a b a"), (2, "a c")], "id long, text string"), 0)
-        sink(spark.createDataFrame([(3, "b c a")], "id long, text string"), 1)
-        before = self._snap(spark, store)
+        sink = line_count_sink(store)
+        text = "shared banner line\nunique body {}"
+        sink(spark.createDataFrame([(1, text.format("one")), (2, text.format("two"))], "id long, text string"), 0)
+        sink(spark.createDataFrame([(3, text.format("one"))], "id long, text string"), 1)
+        return lambda: {tuple(r) for r in read_line_counts(spark, store).collect()}
+
+    # kind -> `store bucketize` arguments for that store
+    _BUCKETIZE = {
+        "textindex": ["-k", "textindex"],
+        "linestore": ["-k", "generic", "--cols", "fp"],
+    }
+
+    @pytest.mark.parametrize("kind", ["textindex", "linestore"])
+    def test_store_compact_and_bucketize(self, spark, tmp_path, kind):
+        store = str(tmp_path / kind)
+        snap = getattr(self, f"_{kind}")(spark, store)
+        before = snap()
         assert before  # non-trivial store
 
-        rc, out = run("store", "compact", store, "-k", "textindex")
-        assert rc == 0 and json.loads(out)["kind"] == "textindex"
-        assert self._snap(spark, store) == before
+        rc, out = run("store", "compact", store, "-k", kind)
+        assert rc == 0 and json.loads(out)["kind"] == kind
+        assert snap() == before
+        if kind == "linestore":
+            # folded: one stored row per fingerprint
+            assert spark.read.parquet(store).count() == len(before)
 
+        table = f"bk_cli_{kind}"
         try:
             rc, out = run(
-                "store", "bucketize", store, "-k", "textindex",
-                "-b", "2", "--table", "bk_cli_postings",
+                "store", "bucketize", store, *self._BUCKETIZE[kind],
+                "-b", "2", "--table", table,
             )
             assert rc == 0
             # post-compaction the only epoch is the compacted slot (-1)
             assert json.loads(out)["watermark"] == -1
-            assert self._snap(spark, store) == before
+            assert snap() == before
         finally:
-            spark.sql("DROP TABLE IF EXISTS bk_cli_postings")
+            spark.sql(f"DROP TABLE IF EXISTS {table}")
 
     def test_store_compact_requires_group_cols(self, spark, tmp_path):
         rc, _ = run("store", "compact", str(tmp_path / "x"), "-k", "distinct")

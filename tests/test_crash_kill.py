@@ -243,3 +243,94 @@ class TestSigkillMidWrite:
             json.loads(r["metadata"])["i"] for r in fresh.read().collect()
         )
         assert got == [0, 1, 2, 3]
+
+
+# The compaction child: its own SparkSession, compact_epoch_store on
+# the parent's count-min store in a loop, an fsync'd progress line
+# before the loop ("ready") and after each finished compaction.
+COMPACT_CHILD = r"""
+import os, sys
+sys.path.insert(0, sys.argv[3])
+from mofka_spark.session import get_spark
+from mofka_spark.streaming import cms
+from mofka_spark.streaming.store import compact_epoch_store
+
+store, progress = sys.argv[1], sys.argv[2]
+spark = get_spark(
+    app_name="kill-compact", master="local[1]",
+    conf={"spark.driver.memory": "1g", "spark.sql.shuffle.partitions": "1"},
+)
+pf = open(progress, "a", buffering=1)
+
+
+def mark(what):
+    pf.write(what + "\n")
+    pf.flush()
+    os.fsync(pf.fileno())
+
+
+mark("ready")
+while True:
+    compact_epoch_store(spark, store, merge=cms.merge)
+    mark("done")
+"""
+
+
+class TestSigkillMidCompaction:
+    def test_reads_survive_kill_at_any_point(self, spark, tmp_path):
+        """SIGKILL a compacting process (and its JVM) at spread delays:
+        each time, the store must read back as the rows it held before
+        the kill (the fragments, or their fold once a compaction has
+        finished), and the merged reader must not change: never empty,
+        never an exception."""
+        from mofka_spark.streaming.cms import cms_sink, read_cms
+        from mofka_spark.streaming.store import read_store
+
+        store = str(tmp_path / "cms")
+        sink = cms_sink(store, "key", depth=2, width=16)
+        for epoch in range(3):
+            keys = [(f"k{(epoch + i) % 7}",) for i in range(20)]
+            sink(spark.createDataFrame(keys, "key string"), epoch)
+
+        def stored():
+            return sorted(map(tuple, read_store(spark, store, "r int, c int, cnt long").collect()))
+
+        def merged():
+            return sorted(map(tuple, read_cms(spark, store).collect()))
+
+        frags, want = stored(), merged()
+        assert len(frags) > len(want)  # the fold changes the stored rows
+        progress = str(tmp_path / "progress")
+
+        def marks(what):
+            if not os.path.exists(progress):
+                return 0
+            with open(progress) as f:
+                return f.read().split().count(what)
+
+        # kill points: mid first compaction, then early and late in a
+        # compaction that follows a finished one
+        for after, delay in (("ready", 0.3), ("done", 0.1), ("done", 0.4)):
+            seen = marks(after)
+            child = subprocess.Popen(
+                [sys.executable, "-c", COMPACT_CHILD, store, progress, REPO],
+                stdout=subprocess.DEVNULL,
+                stderr=subprocess.DEVNULL,
+                start_new_session=True,
+            )
+            try:
+                t0 = time.time()
+                while marks(after) == seen:
+                    assert child.poll() is None, "compaction child died"
+                    assert time.time() - t0 < 120, f"child never reached {after}"
+                    time.sleep(0.02)
+                time.sleep(delay)
+            finally:
+                # the whole group: the child's JVM does the writes
+                os.killpg(child.pid, signal.SIGKILL)
+                child.wait(timeout=60)
+            finished = marks("done")
+            rows = stored()
+            # once a compaction finished, the store holds the fold
+            assert (rows == want) if finished else (rows in (frags, want))
+            assert merged() == want

@@ -572,10 +572,11 @@ class TestIncrementalRollup:
 
     def test_epochs_replay_and_compaction(self, spark, tmp_path):
         from mofka_spark.streaming.rollup import (
-            compact_rollup,
+            merge,
             read_rollup,
             rollup_sink,
         )
+        from mofka_spark.streaming.store import compact_epoch_store
 
         path = str(tmp_path / "agg")
         aggs = {"v": ["count", "sum", "max"]}
@@ -594,7 +595,7 @@ class TestIncrementalRollup:
 
         expect = {"a": (3, 13.0, 10.0), "b": (1, 5.0, 5.0), "c": (1, 0.5, 0.5)}
         assert snap() == expect
-        compact_rollup(spark, path, ["k"], aggs)
+        compact_epoch_store(spark, path, merge=merge(["k"], aggs))
         assert snap() == expect
         # compaction reduced the partial table to one row per group
         assert spark.read.parquet(path).count() == 3
@@ -1049,6 +1050,42 @@ class TestStoreCompaction:
         epoch_write(spark.createDataFrame([(4,)], schema), store, 2)
         assert keys() == [1, 2, 3, 4]
 
+    def test_rollup_read_rolls_forward_after_crash(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The same crash under a rollup store: read_rollup must roll
+        the swap forward and return the compacted totals, not raise on
+        the missing store directory."""
+        from mofka_spark.streaming.rollup import merge, read_rollup, rollup_sink
+        from mofka_spark.streaming.store import compact_epoch_store
+
+        class Crash(Exception):
+            pass
+
+        store = str(tmp_path / "agg")
+        aggs = {"v": ["count", "sum"]}
+        sink = rollup_sink(store, ["k"], aggs)
+        sink(spark.createDataFrame([("a", 1.0), ("b", 5.0)], "k string, v double"), 0)
+        sink(spark.createDataFrame([("a", 2.0)], "k string, v double"), 1)
+        renames = []
+        real_rename = os.rename
+
+        def rename_then_crash(src, dst):
+            renames.append(src)
+            if len(renames) == 2:
+                raise Crash()
+            real_rename(src, dst)
+
+        monkeypatch.setattr(os, "rename", rename_then_crash)
+        with pytest.raises(Crash):
+            compact_epoch_store(spark, store, merge=merge(["k"], aggs))
+        monkeypatch.undo()
+        assert not os.path.exists(store)
+        got = sorted(map(tuple, read_rollup(spark, store, ["k"], aggs).collect()))
+        assert got == [("a", 2, 3.0), ("b", 1, 5.0)]
+        # the compacted slot holds one row per group
+        assert spark.read.parquet(store).count() == 2
+
     def test_ann_store_compaction_keeps_pruning(self, spark, sf_dir, tmp_path):
         from mofka_spark import plans
         from mofka_spark.operators.similarity import fit_centroids
@@ -1300,15 +1337,13 @@ class TestStreamingHeavyHitters:
         assert row.guaranteed
 
     def test_compaction_is_invisible(self, spark, tmp_path):
-        from mofka_spark.streaming.heavyhitters import (
-            compact_hitters,
-            read_top_k,
-        )
+        from mofka_spark.streaming.heavyhitters import merge, read_top_k
+        from mofka_spark.streaming.store import compact_epoch_store
 
         path = str(tmp_path / "hh")
         self._sink_batches(spark, path, m=1)
         before = [(r.item, r.cnt, r.rnk, r.guaranteed) for r in read_top_k(spark, path, 3).collect()]
-        compact_hitters(spark, path)
+        compact_epoch_store(spark, path, merge=merge)
         after = [(r.item, r.cnt, r.rnk, r.guaranteed) for r in read_top_k(spark, path, 3).collect()]
         assert before == after
         # one row per item + one residual row
@@ -1362,9 +1397,10 @@ class TestStreamingBloom:
     def test_replay_and_compaction_are_invisible(self, spark, tmp_path):
         from mofka_spark.streaming.bloom import (
             bloom_sink,
-            compact_bloom,
+            merge,
             read_membership,
         )
+        from mofka_spark.streaming.store import compact_epoch_store
 
         path = str(tmp_path / "bf")
         sink = self._fill(spark, path)
@@ -1389,7 +1425,7 @@ class TestStreamingBloom:
             1,
         )
         assert snap() == before
-        compact_bloom(spark, path)
+        compact_epoch_store(spark, path, merge=merge)
         assert snap() == before
         # exactly one compacted fragment set remains
         assert set(
@@ -1437,10 +1473,11 @@ class TestStreamingSample:
 
     def test_replay_and_compaction_are_invisible(self, spark, tmp_path):
         from mofka_spark.streaming.sample import (
-            compact_sample,
+            merge,
             read_sample,
             sample_sink,
         )
+        from mofka_spark.streaming.store import compact_epoch_store
 
         keys = [f"doc{i}" for i in range(30)]
         path = str(tmp_path / "rs")
@@ -1452,7 +1489,7 @@ class TestStreamingSample:
         before = [tuple(r) for r in read_sample(spark, path, 5).orderBy("rnk").collect()]
         sink(b1, 1)  # replay
         assert [tuple(r) for r in read_sample(spark, path, 5).orderBy("rnk").collect()] == before
-        compact_sample(spark, path, k=5)
+        compact_epoch_store(spark, path, merge=merge(5))
         assert [tuple(r) for r in read_sample(spark, path, 5).orderBy("rnk").collect()] == before
 
     def test_stratified_and_time_travel(self, spark, tmp_path):
@@ -1513,10 +1550,11 @@ class TestStreamingMoments:
 
     def test_replay_and_compaction_invisible(self, spark, tmp_path):
         from mofka_spark.streaming.moments import (
-            compact_moments,
+            merge,
             moments_sink,
             read_component,
         )
+        from mofka_spark.streaming.store import compact_epoch_store
 
         path = str(tmp_path / "m")
         sink = moments_sink(path)
@@ -1526,7 +1564,7 @@ class TestStreamingMoments:
         sink(b2, 1)
         sink(b2, 1)  # replayed epoch overwrites, never double-counts
         before = [(r.d, r.v) for r in read_component(spark, path).collect()]
-        compact_moments(spark, path)
+        compact_epoch_store(spark, path, merge=merge)
         after = [(r.d, r.v) for r in read_component(spark, path).collect()]
         assert before == after
         # compacted store holds exactly one partial set: d^2 + d + 1
@@ -1589,10 +1627,11 @@ class TestStreamingDistinct:
 
     def test_replay_and_compaction_invisible(self, spark, tmp_path):
         from mofka_spark.streaming.distinct import (
-            compact_distinct,
             distinct_sink,
+            merge,
             read_distinct,
         )
+        from mofka_spark.streaming.store import compact_epoch_store
 
         path = str(tmp_path / "d")
         sink = distinct_sink(path, ["g"], "u")
@@ -1602,7 +1641,7 @@ class TestStreamingDistinct:
         sink(b2, 1)  # replay overwrites its own epoch
         schema = "g string, sk binary"
         before = read_distinct(spark, path, ["g"], schema).collect()
-        compact_distinct(spark, path, ["g"])
+        compact_epoch_store(spark, path, merge=merge(["g"]))
         after = read_distinct(spark, path, ["g"], schema).collect()
         assert [(r.g, r.approx_distinct) for r in before] == [
             (r.g, r.approx_distinct) for r in after
@@ -1666,10 +1705,8 @@ class TestStreamingQuantiles:
         assert n == 200
 
     def test_replay_and_compaction_invisible(self, spark, tmp_path):
-        from mofka_spark.streaming.quantiles import (
-            compact_histogram,
-            histogram_sink,
-        )
+        from mofka_spark.streaming.quantiles import histogram_sink, merge
+        from mofka_spark.streaming.store import compact_epoch_store
 
         path = str(tmp_path / "h")
         sink = histogram_sink(path, ["g"], "v", 0.0, 100.0, 20)
@@ -1678,7 +1715,7 @@ class TestStreamingQuantiles:
         sink(b2, 1)
         sink(b2, 1)  # replay overwrites its own epoch
         before = self._read(spark, path)
-        compact_histogram(spark, path, ["g"])
+        compact_epoch_store(spark, path, merge=merge(["g"]))
         after = self._read(spark, path)
         assert before == after
         assert before[0][5] == 200  # no double counting
@@ -1744,17 +1781,18 @@ class TestStoreTimeTravel:
 
     def test_compaction_folds_history_below_the_cut(self, spark, tmp_path):
         from mofka_spark.streaming.rollup import (
-            compact_rollup,
+            merge,
             read_rollup,
             rollup_sink,
         )
+        from mofka_spark.streaming.store import compact_epoch_store
 
         path = str(tmp_path / "agg")
         aggs = {"v": ["sum"]}
         sink = rollup_sink(path, ["k"], aggs)
         sink(spark.createDataFrame([("a", 1.0)], "k string, v double"), 0)
         sink(spark.createDataFrame([("a", 2.0)], "k string, v double"), 1)
-        compact_rollup(spark, path, ["k"], aggs)
+        compact_epoch_store(spark, path, merge=merge(["k"], aggs))
         sink(spark.createDataFrame([("a", 4.0)], "k string, v double"), 2)
         # below the compaction point, history is folded (LSM deal):
         # as_of 0 now sees the whole compacted prefix
@@ -1813,10 +1851,11 @@ class TestStreamingDsir:
 
     def test_replay_and_compaction_invisible(self, spark, tmp_path):
         from mofka_spark.streaming.dsirstore import (
-            compact_dsir,
             dsir_sink,
+            merge,
             read_bucket_counts,
         )
+        from mofka_spark.streaming.store import compact_epoch_store
 
         path = str(tmp_path / "d")
         sink = dsir_sink(path)
@@ -1824,7 +1863,7 @@ class TestStreamingDsir:
         sink(self._docs(spark, 30, 60), 1)
         sink(self._docs(spark, 30, 60), 1)  # replay overwrites its epoch
         before = sorted(map(tuple, read_bucket_counts(spark, path).collect()))
-        compact_dsir(spark, path)
+        compact_epoch_store(spark, path, merge=merge)
         after = sorted(map(tuple, read_bucket_counts(spark, path).collect()))
         assert before == after
         # one row per bucket after compaction
@@ -1960,11 +1999,15 @@ class TestCompactionRefreshesBucketizedLayout:
         self, spark, tmp_path
     ):
         from mofka_spark.streaming.dsirstore import (
-            compact_dsir,
             dsir_sink,
+            merge,
             read_bucket_counts,
         )
-        from mofka_spark.streaming.store import bucketize_store, read_store_split
+        from mofka_spark.streaming.store import (
+            bucketize_store,
+            compact_epoch_store,
+            read_store_split,
+        )
 
         path = str(tmp_path / "store")
         sink = dsir_sink(path)
@@ -1978,7 +2021,7 @@ class TestCompactionRefreshesBucketizedLayout:
         try:
             bucketize_store(spark, path, ["bucket"], num_buckets=4, table=table)
             want = sorted(map(tuple, read_bucket_counts(spark, path).collect()))
-            compact_dsir(spark, path)
+            compact_epoch_store(spark, path, merge=merge)
             base, overlay = read_store_split(
                 spark, path, "bucket long, c long"
             )
@@ -2133,7 +2176,8 @@ class TestStreamingCountMin:
         assert streamed["a"] == 5 and streamed["nope"] == 0
 
     def test_replay_and_compaction_invisible(self, spark, tmp_path):
-        from mofka_spark.streaming.cms import compact_cms
+        from mofka_spark.streaming.cms import merge
+        from mofka_spark.streaming.store import compact_epoch_store
 
         path = str(tmp_path / "cms")
         sink = self._epochs(spark, path)
@@ -2141,7 +2185,7 @@ class TestStreamingCountMin:
         # replay epoch 1: the partition overwrite makes it idempotent
         sink(spark.createDataFrame([("a",)] * 2 + [("c",)] * 4, "key string"), 1)
         assert self._est(spark, path) == before
-        compact_cms(spark, path)
+        compact_epoch_store(spark, path, merge=merge)
         assert self._est(spark, path) == before
         assert set(
             spark.read.parquet(path).select("_epoch").distinct().toPandas()["_epoch"]
@@ -2195,10 +2239,8 @@ class TestStreamingBottomkDistinct:
         assert abs(out["a"] - 60) / 60 < 1.0  # k=8: coarse but sane
 
     def test_replay_and_compaction_invisible(self, spark, tmp_path):
-        from mofka_spark.streaming.sample import (
-            compact_sample,
-            estimate_distinct,
-        )
+        from mofka_spark.streaming.sample import estimate_distinct, merge
+        from mofka_spark.streaming.store import compact_epoch_store
 
         path = str(tmp_path / "bk")
         sink = self._fill(spark, path, k=8)
@@ -2218,7 +2260,7 @@ class TestStreamingBottomkDistinct:
             for r in estimate_distinct(spark, path, k=8).collect()
         }
         assert after_replay == before
-        compact_sample(spark, path, k=8)
+        compact_epoch_store(spark, path, merge=merge(8))
         assert {
             tuple(r)
             for r in estimate_distinct(spark, path, k=8).collect()
@@ -2309,7 +2351,7 @@ class TestStreamingDrift:
         (current side) is unchanged, but per-epoch reference cuts are
         traded away — the documented LSM deal (snapshot the ref PSI
         before compacting)."""
-        from mofka_spark.streaming.quantiles import read_drift
+        from mofka_spark.streaming.quantiles import merge, read_drift
         from mofka_spark.streaming.store import compact_epoch_store
 
         path = str(tmp_path / "h")
@@ -2319,13 +2361,7 @@ class TestStreamingDrift:
         before = read_drift(
             spark, path, "g", self.SCHEMA, nbins=10, ref_epoch=None
         ).collect()
-        compact_epoch_store(
-            spark,
-            path,
-            merge=lambda df: df.groupBy("g", "bin").agg(
-                F.sum("cnt").alias("cnt")
-            ),
-        )
+        compact_epoch_store(spark, path, merge=merge(["g"]))
         after = read_drift(
             spark, path, "g", self.SCHEMA, nbins=10, ref_epoch=None
         ).collect()
@@ -2480,7 +2516,8 @@ class TestStreamingLineStore:
         assert (r["n_lines"], r["n_kept"]) == (3, 2)
 
     def test_replay_and_compaction_invisible(self, spark, tmp_path):
-        from mofka_spark.streaming.linestore import compact_line_counts
+        from mofka_spark.streaming.linestore import merge
+        from mofka_spark.streaming.store import compact_epoch_store
 
         path = str(tmp_path / "lines")
         sink = self._epochs(spark, path)
@@ -2490,7 +2527,7 @@ class TestStreamingLineStore:
              (4, "other repeat\nother repeat\ntiny")],
             "id long, text string"), 1)  # replay epoch 1
         assert tuple(self._filtered(spark, path)) == before
-        compact_line_counts(spark, path)
+        compact_epoch_store(spark, path, merge=merge)
         assert tuple(self._filtered(spark, path)) == before
         assert set(
             spark.read.parquet(path).select("_epoch").distinct().toPandas()["_epoch"]
@@ -2572,9 +2609,8 @@ class TestStreamingWebGraph:
         assert comp["http://s3.ex.com"] == comp["http://s4.ex.com"] == "http://s3.ex.com"
 
     def test_replay_and_compaction_invisible(self, spark, tmp_path):
-        from mofka_spark.streaming.webgraph import (
-            compact_web_graph, web_graph_components,
-        )
+        from mofka_spark.streaming.store import compact_epoch_store
+        from mofka_spark.streaming.webgraph import merge, web_graph_components
 
         path = str(tmp_path / "wg")
         sink = self._epochs(spark, path)
@@ -2590,7 +2626,7 @@ class TestStreamingWebGraph:
             self._page(5, "http://s1.ex.com/"),
         ], "id long, url string, html string"), 1)  # replay epoch 1
         assert result() == before
-        compact_web_graph(spark, path)
+        compact_epoch_store(spark, path, merge=merge)
         assert result() == before
         assert set(
             spark.read.parquet(path).select("_epoch").distinct().toPandas()["_epoch"]
@@ -2671,9 +2707,8 @@ class TestRobotsStore:
         assert self._rules(spark, one) == self._rules(spark, many)
 
     def test_replay_and_compaction_invariance(self, spark, tmp_path):
-        from mofka_spark.streaming.robots import (
-            compact_robots_store, robots_sink,
-        )
+        from mofka_spark.streaming.robots import merge, robots_sink
+        from mofka_spark.streaming.store import compact_epoch_store
 
         path = str(tmp_path / "store")
         sink = robots_sink(path)
@@ -2682,7 +2717,7 @@ class TestRobotsStore:
         before = self._rules(spark, path)
         sink(self._fetch_df(spark, [("a.com", self.BODY_B, 9)]), 1)  # replay
         assert self._rules(spark, path) == before
-        compact_robots_store(spark, path)
+        compact_epoch_store(spark, path, merge=merge)
         assert self._rules(spark, path) == before
 
     def test_time_travel_and_filter_integration(self, spark, tmp_path):
