@@ -160,6 +160,25 @@ def _lacks_parquet_footer(path: str) -> bool:
         # torn footer — do not quarantine.
         return False
 
+
+def _footer_stats(md) -> tuple[int | None, int | None, Any]:
+    """(min_offset, max_offset, max_ingest_ts) of a parquet footer over
+    all its row groups, from column statistics (None where absent)."""
+    cols = {md.schema.column(i).name: i for i in range(md.num_columns)}
+    lo = hi = max_ts = None
+    for rg in range(md.num_row_groups):
+        group = md.row_group(rg)
+        s = group.column(cols["offset"]).statistics
+        if s is not None and s.has_min_max:
+            lo = int(s.min) if lo is None else min(lo, int(s.min))
+            hi = int(s.max) if hi is None else max(hi, int(s.max))
+        if "ingest_ts" in cols:
+            ts = group.column(cols["ingest_ts"]).statistics
+            if ts is not None and ts.has_min_max:
+                max_ts = ts.max if max_ts is None else max(max_ts, ts.max)
+    return lo, hi, max_ts
+
+
 def _ts_to_utc(ts):
     """Normalize a parquet footer-stat timestamp to tz-aware UTC.
     pyarrow returns tz-aware datetimes for tz-annotated columns and
@@ -257,6 +276,7 @@ class EventLog:
         # the producer fast path, consulted by fetch_rows. Cache hit
         # stats: write_cache.stats().
         self.write_cache = WriteCache.from_config(write_cache)
+        self._footers: dict[int, dict[str, tuple]] = {}  # _file_stats
 
     # -- ledger ------------------------------------------------------------
     # On-disk format v5 adds "trim": {partition: trim-floor} — offsets
@@ -399,9 +419,9 @@ class EventLog:
         file is never ledger-committed and never an acknowledged
         event; dropping it is the reference's trust-the-data recovery
         applied to the file layer (its pre-test kills a live server
-        the same way, /root/reference/tests/pre-test.sh)."""
-        import pyarrow.parquet as pq
-
+        the same way, /root/reference/tests/pre-test.sh). Called under
+        the ledger flock, so a file the index skipped as footer-less is
+        not a write in flight: it is torn."""
         out: dict[int, int] = {}
         if not os.path.isdir(self.data_path):
             return out
@@ -411,22 +431,13 @@ class EventLog:
             p = int(entry.split("=", 1)[1])
             if self.scope is not None and p not in self.scope:
                 continue
+            stats = self._file_stats(p)
+            indexed = self._footers.get(p, {})
             pdir = os.path.join(self.data_path, entry)
             for fn in os.listdir(pdir):
-                if not fn.endswith(".parquet"):
-                    continue
                 path = os.path.join(pdir, fn)
-                try:
-                    md = pq.ParquetFile(path).metadata
-                except Exception:
-                    # Quarantine ONLY files that genuinely lack a parquet
-                    # footer (no trailing PAR1 magic = writer killed
-                    # mid-write). A transient I/O error (EIO, out-of-FDs)
-                    # on a healthy ledger-committed file must NOT rename
-                    # acked data out of the readable set — re-raise so the
-                    # caller sees the fault instead of silent data loss.
-                    if not _lacks_parquet_footer(path):
-                        raise
+                if (fn.endswith(".parquet") and fn not in indexed
+                        and _lacks_parquet_footer(path)):
                     # dot-prefix: Spark scans skip hidden files, so
                     # the quarantined remnant disappears from readers
                     # (a bare suffix rename would NOT — Spark lists
@@ -435,12 +446,8 @@ class EventLog:
                     os.replace(
                         path, os.path.join(pdir, "." + fn + ".corrupt")
                     )
-                    continue
-                idx = {md.schema.column(i).name: i for i in range(md.num_columns)}["offset"]
-                for rg in range(md.num_row_groups):
-                    stats = md.row_group(rg).column(idx).statistics
-                    if stats is not None and stats.has_min_max:
-                        out[p] = max(out.get(p, 0), int(stats.max) + 1)
+            if stats:
+                out[p] = max(s[1] for s in stats) + 1
         return out
 
     def _ensure_consistent(self) -> None:
@@ -771,6 +778,7 @@ class EventLog:
         """
         import uuid
 
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
         out: dict[int, tuple[int, int]] = {}
@@ -783,50 +791,31 @@ class EventLog:
             if self.scope is not None and p not in self.scope:
                 continue
             pdir = os.path.join(self.data_path, entry)
-            files = sorted(
-                fn for fn in os.listdir(pdir) if fn.endswith(".parquet")
-            )
-            if len(files) < min_files:
-                out[p] = (len(files), len(files))
+            n = sum(fn.endswith(".parquet") for fn in os.listdir(pdir))
+            if n < min_files:
+                out[p] = (n, n)
                 continue
             with self._ledger_lock():
-                # re-list under the lock: a producer may have flushed
-                # between the scan and the lock
-                import pyarrow as pa
-
-                files = sorted(
-                    fn for fn in os.listdir(pdir) if fn.endswith(".parquet")
-                )
-                # order files by their min offset and bin by size, so
-                # memory is bounded by target_mb per merge and output
-                # files cover near-disjoint offset ranges (selective
-                # row-group stats)
-                keyed = []
-                for fn in files:
-                    fp = os.path.join(pdir, fn)
-                    md = pq.ParquetFile(fp).metadata
-                    idx = {
-                        md.schema.column(i).name: i
-                        for i in range(md.num_columns)
-                    }["offset"]
-                    stats = md.row_group(0).column(idx).statistics
-                    lo = int(stats.min) if stats and stats.has_min_max else 0
-                    keyed.append((lo, fn, os.path.getsize(fp)))
-                keyed.sort()
+                # re-list under the lock (a producer may have flushed
+                # since); bin in min-offset order by size, so memory is
+                # bounded by target_mb per merge and outputs cover
+                # near-disjoint offset ranges (selective row-group stats)
+                files = self._file_stats(p)
                 target = target_mb * 1024 * 1024
                 bins: list[list[str]] = [[]]
                 acc = 0
-                for _lo, fn, sz in keyed:
+                for _lo, _hi, _ts, path in files:
+                    sz = os.path.getsize(path)
                     if bins[-1] and acc + sz > target:
                         bins.append([])
                         acc = 0
-                    bins[-1].append(fn)
+                    bins[-1].append(path)
                     acc += sz
                 for group in bins:
                     if len(group) < 2:
                         continue
                     merged = pa.concat_tables(
-                        pq.read_table(os.path.join(pdir, fn)) for fn in group
+                        pq.read_table(path) for path in group
                     ).sort_by("offset")
                     tmp = os.path.join(pdir, f".compact-{uuid.uuid4().hex}.tmp")
                     dst = os.path.join(
@@ -834,12 +823,11 @@ class EventLog:
                     )
                     pq.write_table(merged, tmp)
                     os.replace(tmp, dst)
-                    for fn in group:
-                        os.unlink(os.path.join(pdir, fn))
+                    for path in group:
+                        os.unlink(path)
                 out[p] = (
                     len(files),
-                    sum(1 for g in bins if len(g) >= 2)
-                    + sum(len(g) for g in bins if len(g) < 2),
+                    sum(1 if len(g) >= 2 else len(g) for g in bins),
                 )
         return out
 
@@ -857,41 +845,54 @@ class EventLog:
         self, p: int
     ) -> list[tuple[int, int, "Any", str]]:
         """(min_offset, max_offset, max_ingest_ts, path) per parquet
-        file of partition ``p``, sorted by min_offset. Footer-stats
-        metadata reads only — no Spark job, no row reads (the same
-        driver-side discipline as _footer_max_offsets). Files hold
-        disjoint dense offset ranges (each covers a committed range;
-        compaction merges disjoint bins), so min-offset order is also
-        offset-range order."""
+        file of partition ``p``, sorted by min_offset: the partition's
+        file index and the log's one footer reader (recovery, trim,
+        compaction, pull). Files hold disjoint dense offset ranges, so
+        min-offset order is also offset-range order.
+
+        Incremental: each call re-lists the directory and reads a
+        footer only for a name this handle has not seen; gone names
+        (trim, compaction, any process) drop out. Sound because file
+        names are never reused (each carries a uuid4 or a Spark job
+        uuid), so a name always denotes the same bytes. Each call
+        builds a new map and assigns it (threads share one handle).
+
+        A footer read error re-raises (a transient EIO on acked data),
+        unless the file has no footer: a fast-path write in flight (it
+        writes under the flock; readers take none) or a torn remnant,
+        skipped and not remembered. Callers read the heads before this
+        listing and a write commits only after it returns, so such a
+        file holds no offset below those heads."""
         import pyarrow.parquet as pq
 
         pdir = os.path.join(self.data_path, f"partition={p}")
-        out = []
-        if not os.path.isdir(pdir):
-            return out
-        for fn in os.listdir(pdir):
+        try:
+            names = os.listdir(pdir)
+        except FileNotFoundError:
+            return []
+        known = self._footers.get(p, {})
+        index: dict[str, tuple] = {}
+        for fn in names:
             if not fn.endswith(".parquet"):
                 continue
+            if fn in known:
+                index[fn] = known[fn]
+                continue
             path = os.path.join(pdir, fn)
-            md = pq.ParquetFile(path).metadata
-            idx = {
-                md.schema.column(i).name: i for i in range(md.num_columns)
-            }
-            lo = hi = None
-            max_ts = None
-            for rg in range(md.num_row_groups):
-                s = md.row_group(rg).column(idx["offset"]).statistics
-                if s is not None and s.has_min_max:
-                    lo = int(s.min) if lo is None else min(lo, int(s.min))
-                    hi = int(s.max) if hi is None else max(hi, int(s.max))
-                ts = md.row_group(rg).column(idx["ingest_ts"]).statistics
-                if ts is not None and ts.has_min_max:
-                    t = ts.max
-                    max_ts = t if max_ts is None else max(max_ts, t)
-            if lo is not None:
-                out.append((lo, hi, max_ts, path))
-        out.sort()
-        return out
+            try:
+                md = pq.ParquetFile(path).metadata
+            except FileNotFoundError:
+                continue  # unlinked since the listing
+            except Exception:
+                if not _lacks_parquet_footer(path):
+                    raise
+                continue
+            index[fn] = (*_footer_stats(md), path)
+        self._footers[p] = index
+        return sorted(
+            (s for s in index.values() if s[0] is not None),
+            key=lambda s: (s[0], s[3]),
+        )
 
     def _cursor_fence(
         self,
@@ -1184,10 +1185,16 @@ class EventLog:
 
         The pull API materializes rows into client memory by definition,
         so a Spark job per feed round buys nothing but scheduler
-        overhead — this reads the pruned tail row-groups directly with
-        pyarrow (the same offset-predicate scan streaming/source.py
-        runs executor-side). Spark remains the path for everything that
-        STAYS distributed (dataframe(), read_range, analytics)."""
+        overhead — this reads with pyarrow only the files the file index
+        (_file_stats) says overlap [c, hi), so a round costs O(batch),
+        not O(files in the partition), like the reference feedConsumer's
+        per-partition index. Spark remains the path for everything that
+        STAYS distributed (dataframe(), read_range, analytics).
+
+        Every offset below the readable head is written, so each
+        partition must read back exactly [c, hi): a gap (missing file)
+        or duplicates (a pull racing compact_files' swap) raise
+        MofkaError rather than move the consumer past them."""
         import pyarrow.dataset as pads
 
         # first use on a fresh post-crash handle: quarantine torn files
@@ -1217,19 +1224,21 @@ class EventLog:
                 if cached is not None:
                     out.extend((p, off, m, d) for off, m, d in cached)
                     continue
-            pdir = os.path.join(self.data_path, f"partition={p}")
-            if not os.path.isdir(pdir):
-                continue
-            dataset = pads.dataset(pdir, format="parquet")
-            flt = (pads.field("offset") >= c) & (
-                pads.field("offset") < hi
-            )
-            tbl = dataset.to_table(
-                columns=["offset", "metadata", "data"], filter=flt
-            ).sort_by("offset")
-            offs = tbl.column("offset").to_pylist()
-            metas = tbl.column("metadata").to_pylist()
-            datas = tbl.column("data").to_pylist()
+            paths = [
+                path for lo, mx, _ts, path in self._file_stats(p)
+                if lo < hi and mx >= c
+            ]
+            offs, metas, datas = [], [], []
+            if paths:
+                offs, metas, datas = pads.dataset(paths, format="parquet").to_table(
+                    columns=["offset", "metadata", "data"],
+                    filter=(pads.field("offset") >= c) & (pads.field("offset") < hi),
+                ).sort_by("offset").to_pydict().values()
+            if offs != list(range(c, hi)):
+                raise MofkaError(
+                    f"partition {p}: read {len(offs)} rows for committed "
+                    f"offsets [{c}, {hi}): a file is missing or duplicated"
+                )
             out.extend(zip([p] * len(offs), offs, metas, datas))
         return out
 

@@ -32,7 +32,6 @@ micro-batches).
 
 from __future__ import annotations
 
-import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F

@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from mofka_spark.streaming.store import (
     bucketize_store,
     compact_epoch_store,
-    epoch_write,
     epoch_write_all,
     read_store,
     read_store_split,

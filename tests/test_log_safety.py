@@ -179,6 +179,107 @@ class TestPullPushdown:
             assert offs == sorted(offs)
 
 
+class TestPullFileIndex:
+    """The pull path scans only the files its offset range touches, and
+    a feed round returns exactly its committed range or raises."""
+
+    def test_missing_committed_file_raises(self, driver):
+        import pyarrow.parquet as pq
+        import pytest
+
+        from mofka_spark.errors import MofkaError
+
+        topic = driver.create_topic(
+            "t-gap", num_partitions=1, write_cache={"enabled": False}
+        )
+        for i in range(6):  # one single-event file per flush
+            _push_n(topic, 1, start=i)
+        pdir = os.path.join(topic.log.data_path, "partition=0")
+        holding_2 = [
+            fn for fn in os.listdir(pdir)
+            if fn.endswith(".parquet")
+            and pq.read_table(os.path.join(pdir, fn))["offset"].to_pylist() == [2]
+        ]
+        assert len(holding_2) == 1
+        os.unlink(os.path.join(pdir, holding_2[0]))
+        # the consumer must not jump over offset 2
+        with pytest.raises(MofkaError):
+            topic.consumer("c", batch_size=8).pull()
+
+    def test_file_still_being_written_is_skipped(self, tmp_path):
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from mofka_spark.log import EventLog
+
+        log = EventLog(None, str(tmp_path / "t"), "t-inflight",
+                       write_cache={"enabled": False})
+        for i in range(3):
+            log.append_rows([(0, 0, json.dumps({"i": i}), None)])
+        assert len(log.fetch_rows({0: 0}, 10)) == 3  # handle verified
+        # a fast-path writer holding the flock has written the header of
+        # its file and not yet the footer
+        inflight = os.path.join(
+            log.data_path, "partition=0", f"part-{uuid.uuid4().hex}.parquet"
+        )
+        with open(inflight, "wb") as f:
+            f.write(b"PAR1" + b"\0" * 64)
+        got = log.fetch_rows({0: 0}, 10)
+        assert [r[1] for r in got] == [0, 1, 2]
+        assert os.path.exists(inflight)  # not quarantined
+        # the write completes and commits: the next round reads it
+        pq.write_table(pa.table({
+            "topic": pa.array(["t-inflight"], pa.string()),
+            "offset": pa.array([3], pa.int64()),
+            "metadata": pa.array([json.dumps({"i": 3})], pa.string()),
+            "data": pa.array([None], pa.binary()),
+        }), inflight)
+        with log._ledger_lock():
+            full = log._read_ledger_full()
+            log._commit_range(full, 0, 3, 1)
+            log._write_ledger_full(full)
+        assert [r[1] for r in log.fetch_rows({0: 0}, 10)] == [0, 1, 2, 3]
+
+    def test_pull_cost_does_not_grow_with_file_count(self, tmp_path, monkeypatch):
+        import pyarrow.dataset as pads
+        import pyarrow.parquet as pq
+
+        from mofka_spark.log import EventLog
+
+        root = str(tmp_path / "t")
+        writer = EventLog(None, root, "t-files")
+        for i in range(200):  # 200 single-event files
+            writer.append_rows([(0, 0, json.dumps({"i": i}), None)])
+        footers, scans = [], []
+        real_file, real_dataset = pq.ParquetFile, pads.dataset
+
+        def spy_file(path, *a, **kw):
+            footers.append(path)
+            return real_file(path, *a, **kw)
+
+        def spy_dataset(source, *a, **kw):
+            scans.append(source)
+            return real_dataset(source, *a, **kw)
+
+        # log.py imports both modules inside its functions, so the
+        # module-level patches are what it sees
+        monkeypatch.setattr(pq, "ParquetFile", spy_file)
+        monkeypatch.setattr(pads, "dataset", spy_dataset)
+        batch = 4
+        log = EventLog(None, root, "t-files", write_cache={"enabled": False})
+        cur, got = 0, []
+        while rows := log.fetch_rows({0: cur}, batch):
+            got += [off for _p, off, _m, _d in rows]
+            cur = got[-1] + 1
+        assert got == list(range(200))
+        # each footer read once across the drain, whatever the round count
+        assert len(footers) == len(set(footers)) == 200
+        assert len(scans) == 200 // batch
+        assert all(isinstance(s, list) and len(s) <= batch + 1 for s in scans)
+
+
 class TestConcurrentProducers:
     def test_two_producers_interleaved_offsets_stay_dense(self, spark, tmp_path):
         """Two independent Driver instances (separate EventLog objects,
